@@ -4,17 +4,23 @@ per-partition lineage + metrics").
 
 Mechanism (Iceberg-shaped, parquet-backed in this sandbox):
 - the turn keyspace is split into ``n_buckets`` stable buckets via
-  pmod(xxhash64(conv_id, turn_idx), n) — the same hash the extraction
-  plan repartitions by, so bucket == physical partition lineage unit
-- output written as parquet partitioned by ``bucket`` (with Iceberg
-  this is a hidden-partition ``bucket(conv_id, N)`` transform and each
-  batch commit is a snapshot)
+  pmod(xxhash64(conv_id, turn_idx), n), computed once on the input;
+  the hash scheme is versioned (``BUCKET_HASH_V``) in every lineage row
+- the bucket is the physical partition: each batch's input is
+  hash-repartitioned by ``bucket`` before the kernel stage (the job's
+  one added shuffle, moving input rows only), so every bucket is
+  extracted by exactly one task and committed as exactly one parquet
+  file under ``bucket=<b>`` — the lineage unit and the file agree
+- the bucket rides through the kernel stage as a carried column, so
+  the output is never re-hashed (with Iceberg the partitioning is a
+  hidden ``bucket(conv_id, N)``-style transform and each batch commit
+  is a snapshot)
 - after each bucket-batch commit, one lineage row per bucket is
   appended to ``<out>/_lineage`` recording rows/chars/regions/refs
 - ``resume=True`` reads the lineage table and processes only buckets
   without a committed lineage row; re-running a partially-failed job
   is idempotent (dynamic partition overwrite replaces any partial
-  bucket output)
+  bucket output); ``resume=False`` deletes ``out_dir`` first
 """
 
 from __future__ import annotations
@@ -30,16 +36,24 @@ from .settings import DEFAULT, Settings
 LINEAGE_SUBDIR = "_lineage"
 
 
+# Version of the bucket-assignment scheme below.  Every lineage row
+# records it and resume refuses lineage written under another value:
+# a changed hash (or changed hash-input types) silently re-assigns
+# rows across already-'done' bucket ids.  Bump on ANY change to
+# with_bucket's expression.
+BUCKET_HASH_V = 1
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Stable bucket from (conv_id, turn_idx) — with the hash inputs
-    pinned to (string, int) FIRST: xxhash64 of the same value under a
-    different type is a different hash (int 5 vs bigint 5 land in
-    different buckets, verified), and this function is applied both
-    to the INPUT for scheduling and to the extraction OUTPUT (whose
-    turn_idx is int32) for the partition write — an input arriving
-    with a bigint turn_idx would otherwise write rows into OTHER
-    batches' partitions, which later batches then overwrite (silent
-    data loss) while lineage undercounts."""
+    """Stable bucket from (conv_id, turn_idx).  Applied once, to the
+    job's INPUT — the extraction stage carries the column through to
+    the output, which is never hashed again.
+
+    The hash inputs are pinned to (string, int) FIRST: xxhash64 of
+    the same value under a different type is a different hash (int 5
+    vs bigint 5 land in different buckets, verified), so without the
+    pin a resume over an input whose turn_idx arrived as bigint would
+    assign rows to other buckets than the committed lineage did."""
     return df.withColumn(
         "bucket",
         F.pmod(
@@ -58,10 +72,12 @@ def completed_buckets(
     """Bucket ids with a committed lineage row.  Only a MISSING
     lineage path means "nothing done yet" — any other read failure
     propagates (swallowing it would silently reprocess a finished job
-    and append duplicate lineage rows).  When ``n_buckets`` is given,
-    a lineage table recorded under a different bucketing refuses to
+    and append duplicate lineage rows).  A lineage table recorded
+    under another bucket-hash scheme (``bucket_hash_v``) or, when
+    ``n_buckets`` is given, under a different bucket count refuses to
     resume: the old bucket ids would mis-assign rows under the new
-    hash, silently skipping data."""
+    bucketing, silently skipping data.  Rows written before a pin
+    existed carry NULL and pass."""
     # empty-start classification shared with the streaming bloom
     # store — see ioutil.is_empty_start_exc for why only missing-path
     # reads may map to "nothing committed yet"
@@ -72,23 +88,24 @@ def completed_buckets(
     )
     if lineage is None:
         return set()
-    if n_buckets is not None and "n_buckets" in lineage.columns:
+    pins = {"bucket_hash_v": BUCKET_HASH_V}
+    if n_buckets is not None:
+        pins["n_buckets"] = n_buckets
+    for name, want in pins.items():
+        if name not in lineage.columns:
+            continue
         bad = (
-            lineage.where(
-                F.col("n_buckets").isNotNull()
-                & (F.col("n_buckets") != n_buckets)
-            )
-            .select("n_buckets")
+            lineage.where(F.col(name).isNotNull() & (F.col(name) != want))
+            .select(name)
             .limit(1)
             .collect()
         )
         if bad:
             raise ValueError(
                 f"lineage at {out_dir} was committed with "
-                f"n_buckets={bad[0][0]}; resuming with "
-                f"n_buckets={n_buckets} would assign different rows to "
-                f"already-'done' bucket ids — rerun with the original "
-                f"bucketing or a fresh out_dir"
+                f"{name}={bad[0][0]}; resuming with {name}={want} would "
+                f"assign different rows to already-'done' bucket ids — "
+                f"rerun with the original bucketing or a fresh out_dir"
             )
     rows = lineage.select("bucket").distinct().collect()
     return {r[0] for r in rows}
@@ -110,9 +127,11 @@ def run_extraction_job(
 
     Batches bound the blast radius of a failure: a crash loses at most
     one uncommitted batch, and ``resume=True`` picks up from the last
-    committed lineage row.  With Iceberg, replace the parquet writes
-    with ``writeTo(...).overwritePartitions()`` — the logic is
-    unchanged.
+    committed lineage row.  ``resume=False`` deletes ``out_dir`` —
+    the ``bucket=*`` partitions and the lineage — before the first
+    batch, so the output holds exactly this run.  With Iceberg,
+    replace the parquet writes with
+    ``writeTo(...).overwritePartitions()`` — the logic is unchanged.
     """
     # per-job override, restored afterwards — permanently flipping the
     # session's overwrite semantics would change unrelated later writes
@@ -125,31 +144,52 @@ def run_extraction_job(
         if resume:
             done = completed_buckets(spark, out_dir, n_buckets)
         else:
-            # a full reprocess must start from EMPTY lineage: output
-            # partitions are overwritten below, but lineage appends
-            # per batch — without this truncation a resume=False
-            # rerun over an existing out_dir stacks a second
-            # generation of rows and every downstream metric sum
-            # double-counts
+            # a full reprocess starts from an EMPTY out_dir: lineage
+            # appends per batch (a second generation would double
+            # every metric sum), and dynamic partition overwrite only
+            # replaces partitions the rerun writes — a bucket that is
+            # empty this time, or an id past a smaller n_buckets,
+            # would keep the old generation's rows unaccounted for
             from .ioutil import delete_path
 
-            delete_path(spark, f"{out_dir}/{LINEAGE_SUBDIR}")
+            delete_path(spark, out_dir)
             done = set()
         todo = [b for b in range(n_buckets) if b not in done]
 
         for i in range(0, len(todo), buckets_per_batch):
             batch = todo[i : i + buckets_per_batch]
-            part = src.where(F.col("bucket").isin(batch))
-            # recompute the bucket from the same hash instead of
-            # joining it back — the extraction output keeps (conv_id,
-            # turn_idx), so the bucket is a pure projection (no
-            # shuffle).  persist(): the output write and the lineage
-            # aggregation both consume the result, and the extraction
-            # kernel is the dominant cost — without the persist it
-            # would run twice per batch.
-            result = with_bucket(
-                extract(part, settings, on_error=on_error, want=want),
-                n_buckets,
+            # cluster by bucket BEFORE the kernel: each bucket lands in
+            # one task and so one file, instead of one file per input
+            # split per bucket.  The shuffle moves only input rows,
+            # and the task count stays at most the cluster's slots, so
+            # the Python stage gets no extra tasks.  Known hash skew:
+            # with 16 buckets over 4 tasks the busiest task gets 6-7
+            # buckets (5 in one of a 64-bucket job's four batches),
+            # against a mean of 4.
+            part = src.where(F.col("bucket").isin(batch)).repartition(
+                min(len(batch), spark.sparkContext.defaultParallelism),
+                "bucket",
+            )
+            # the bucket is carried through the kernel stage (a
+            # verbatim Arrow column copy), not re-hashed on the output.
+            # persist(): the output write and the lineage aggregation
+            # both consume the result, and the extraction kernel is
+            # the dominant cost — without the persist it would run
+            # twice per batch.  Alternatives measured on the job
+            # benchmark (1,200 turns, 64 buckets, 4 cores) and
+            # rejected:
+            # - one task per bucket: 30% slower; every PySpark task
+            #   pays ~0.2 CPU-s of worker set-up however few rows it
+            #   has (setup_spark_files -> importlib.invalidate_caches()
+            #   re-reads pyspark.zip);
+            # - repartitionByRange: no faster than hash, and it adds
+            #   a sampling job;
+            # - no persist, lineage read back from the committed
+            #   files: 5-16% fewer rows/s at this size;
+            # - lineage through DataFrame.observe(): slower still.
+            result = extract(
+                part, settings, on_error=on_error, want=want,
+                carry=("bucket",),
             ).persist()
             try:
                 result.write.mode("overwrite").partitionBy(
@@ -201,6 +241,7 @@ def run_extraction_job(
                         ),
                     )
                     .withColumn("n_buckets", F.lit(n_buckets))
+                    .withColumn("bucket_hash_v", F.lit(BUCKET_HASH_V))
                     .withColumn("committed_at", F.lit(time.time()))
                 )
                 lineage.write.mode("append").parquet(

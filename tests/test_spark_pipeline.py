@@ -79,6 +79,7 @@ def test_extract_ligature_transliteration(spark):
 
 def test_resumable_sink_and_lineage(spark, tmp_path):
     from pdfextract_spark.sinks import (
+        BUCKET_HASH_V,
         completed_buckets,
         conv_metrics_rollup,
         run_extraction_job,
@@ -121,6 +122,19 @@ def test_resumable_sink_and_lineage(spark, tmp_path):
     assert result.count() == 4
     roll = conv_metrics_rollup(result).collect()
     assert {r["conv_id"] for r in roll} == {"c0", "c1"}
+
+    # lineage records the bucket-hash scheme, and lineage committed
+    # under another scheme is refused the same way
+    assert {r["bucket_hash_v"] for r in lineage.collect()} == {BUCKET_HASH_V}
+    other = lineage.limit(1).collect()[0].asDict()
+    other["bucket_hash_v"] = BUCKET_HASH_V + 1
+    spark.createDataFrame([other], lineage.schema).write.mode(
+        "append"
+    ).parquet(f"{out_dir}/_lineage")
+    with _pytest.raises(ValueError, match="bucket_hash_v"):
+        run_extraction_job(
+            spark, t, out_dir, n_buckets=4, buckets_per_batch=2, resume=True
+        )
 
 
 def test_streaming_extraction(spark, tmp_path):
@@ -612,12 +626,12 @@ def test_extract_rejects_unknown_want(spark):
 
 
 def test_with_bucket_type_stable(spark):
-    """The bucket hash is applied to the INPUT for scheduling and to
-    the extraction OUTPUT (int32 turn_idx) for the partition write;
-    xxhash64 of the same value under a different integer width is a
-    DIFFERENT hash, so a bigint input used to land rows in other
-    batches' partitions (overwritten later — silent data loss).  The
-    hash inputs are now pinned to (string, int) first."""
+    """xxhash64 of the same value under a different integer width is
+    a DIFFERENT hash, so the bucket of a turn must not depend on
+    whether turn_idx arrived as int or bigint — otherwise a resume
+    over a re-typed input assigns rows to other buckets than the
+    committed lineage did.  The hash inputs are pinned to (string,
+    int) first."""
     from pdfextract_spark.sinks import with_bucket
 
     as_int = spark.createDataFrame(
@@ -633,23 +647,137 @@ def test_with_bucket_type_stable(spark):
     assert bi == bb, (bi, bb)
 
 
+def _multi_file_transcripts(spark, tmp_path, n=64, files=4):
+    """A transcripts table of ``files`` parquet files, ``n`` turns
+    cycling through TEXTS (so refs_matched is non-zero), read back
+    through the production reader."""
+    from pdfextract_spark.sources.tables import read_transcripts
+
+    path = str(tmp_path / "transcripts")
+    rows = [(f"c{i % 8}", i, "user", TEXTS[i % len(TEXTS)]) for i in range(n)]
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string"
+    ).repartition(files).write.parquet(path)
+    assert len(_data_files(path)) == files
+    return read_transcripts(spark, path)
+
+
+def _data_files(path):
+    import os
+
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+def _keys(df):
+    return sorted((r["conv_id"], r["turn_idx"]) for r in df.collect())
+
+
 def test_resume_false_truncates_lineage(spark, tmp_path):
-    """resume=False reprocesses everything: output partitions are
-    overwritten, but lineage used to APPEND a second generation of
-    rows — every downstream metric sum then double-counted."""
-    from pdfextract_spark.sinks import run_extraction_job
+    """resume=False reprocesses everything from an empty out_dir.
+    Lineage used to APPEND a second generation of rows (every
+    downstream metric sum then double-counted), and dynamic partition
+    overwrite replaces only the partitions a run writes, so a bucket
+    with no input rows in the rerun kept its old rows on disk,
+    unaccounted for by the fresh lineage."""
+    from pdfextract_spark.sinks import run_extraction_job, with_bucket
     from pdfextract_spark.sources import synth_transcripts
 
     out = str(tmp_path / "out")
-    t = synth_transcripts(spark, "/root/testdata/sf0.001", turns_per_doc=1)
+    t = with_bucket(
+        synth_transcripts(spark, "/root/testdata/sf0.001", turns_per_doc=1),
+        4,
+    )
     l1 = run_extraction_job(
-        spark, t, out, n_buckets=4, buckets_per_batch=4, resume=False
+        spark, t.drop("bucket"), out, n_buckets=4, buckets_per_batch=4,
+        resume=False,
     )
     assert l1.count() == 4
+    gone = t.select("bucket").first()["bucket"]
+    shrunk = t.where(F.col("bucket") != gone).drop("bucket")
     l2 = run_extraction_job(
-        spark, t, out, n_buckets=4, buckets_per_batch=4, resume=False
+        spark, shrunk, out, n_buckets=4, buckets_per_batch=4, resume=False
     )
     assert l2.count() == 4  # fresh generation, not 8 stacked rows
+    got = spark.read.parquet(out)
+    assert got.where(F.col("bucket") == gone).count() == 0
+    assert _keys(got.select("conv_id", "turn_idx")) == _keys(shrunk)
+
+
+def test_one_file_per_bucket(spark, tmp_path):
+    """Each batch is clustered by bucket before the kernel stage, so a
+    bucket is written by one task into one file — not one file per
+    input split — and every row sits in the partition of its own
+    (conv_id, turn_idx) hash."""
+    import os
+
+    from pdfextract_spark.sinks import run_extraction_job, with_bucket
+
+    out = str(tmp_path / "out")
+    t = _multi_file_transcripts(spark, tmp_path)
+    run_extraction_job(
+        spark, t, out, n_buckets=8, buckets_per_batch=4, resume=False
+    )
+    dirs = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
+    assert dirs == [f"bucket={b}" for b in range(8)]
+    for d in dirs:
+        assert len(_data_files(os.path.join(out, d))) == 1, d
+
+    got = spark.read.parquet(out).withColumnRenamed("bucket", "dir_bucket")
+    assert got.count() == t.count()
+    assert (
+        with_bucket(got, 8).where(F.col("bucket") != F.col("dir_bucket"))
+        .count()
+        == 0
+    )
+
+
+def test_crash_resume_exactly_once_clustered(spark, tmp_path, monkeypatch):
+    """A batch that fails before its commit, then a resume=True rerun:
+    every input turn is in the output exactly once, every bucket has
+    one lineage row and one file, and refs_matched equals an
+    uninterrupted run's."""
+    import collections
+    import os
+
+    from pdfextract_spark import sinks
+
+    t = _multi_file_transcripts(spark, tmp_path)
+    job = dict(n_buckets=8, buckets_per_batch=2)
+
+    clean = sinks.run_extraction_job(
+        spark, t, str(tmp_path / "clean"), resume=False, **job
+    )
+    want_refs = {r["bucket"]: r["refs_matched"] for r in clean.collect()}
+    assert sum(want_refs.values()) > 0
+
+    real_extract = sinks.extract
+    calls = []
+
+    def crash_on_second(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash before the batch commit")
+        return real_extract(*a, **kw)
+
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(sinks, "extract", crash_on_second)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sinks.run_extraction_job(spark, t, out, resume=False, **job)
+    assert sinks.completed_buckets(spark, out, 8) == {0, 1}
+    monkeypatch.setattr(sinks, "extract", real_extract)
+
+    lineage = sinks.run_extraction_job(spark, t, out, resume=True, **job)
+
+    counts = collections.Counter(
+        _keys(spark.read.parquet(out).select("conv_id", "turn_idx"))
+    )
+    assert sorted(counts) == _keys(t.select("conv_id", "turn_idx"))
+    assert set(counts.values()) == {1}
+    lin = lineage.collect()
+    assert sorted(r["bucket"] for r in lin) == list(range(8))
+    for b in range(8):
+        assert len(_data_files(os.path.join(out, f"bucket={b}"))) == 1, b
+    assert {r["bucket"]: r["refs_matched"] for r in lin} == want_refs
 
 
 def test_write_table_iceberg_rejects_unsupported_modes(spark, tmp_path):
