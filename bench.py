@@ -51,8 +51,9 @@ def sf_of(sf_dir: str) -> float:
 # shared host swings 2-5x between windows, so cross-engine ratios are
 # only honest when both sides see the same load.  The headline
 # "queries"/"duckdb_sec" fields stay min-across-windows; note min over
-# 3 windows draws stochastically lower than the min-of-2 rounds 1-4
-# recorded, so the emitted "min_of" field records N and cross-round
+# 3 windows draws stochastically lower than the min of 2 back-to-back
+# repeats that rounds 1-4 recorded as "min_of", so N is emitted as
+# "windows" (never as "min_of", a different estimator) and cross-round
 # comparisons should read the per-query "bands" (samples, medians,
 # same-window ratios), not the headline min.  Scaling RATIOS use
 # time-paired rounds instead — tools/scaling.py.
@@ -257,7 +258,6 @@ def main() -> None:
     total = round(sum(queries.values()), 3)
     extras: dict = {}
     if not extract_only:
-        extras["windows"] = WINDOWS
         extras["bands"] = bands
         # min-across-windows denominators keep the field shape earlier
         # rounds recorded; the same-window pairing lives in "bands"
@@ -284,7 +284,7 @@ def main() -> None:
         "cores": cores,
         "turns": n_turns,
         "extract_turns_per_sec": round(tps, 1),
-        "min_of": WINDOWS,
+        "windows": WINDOWS,
         **extras,
     }
     print(json.dumps(out))

@@ -183,6 +183,13 @@ def minhash_bands(
     return bands
 
 
+def _bucket_pairs(size_col: str) -> Column:
+    """Pairs among the docs of one band bucket, ``B * (B - 1) / 2``,
+    in bigint throughout: a double loses exactness past 2^53, which a
+    bucket of ~1.3e8 docs already reaches."""
+    return F.expr(f"{size_col} * ({size_col} - 1) DIV 2")
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -207,7 +214,9 @@ def lsh_candidate_pairs(
     (with the largest size and the pair count avoided), and the same
     numbers land in ``stats`` under ``lsh_oversized_buckets`` /
     ``lsh_max_bucket_size_seen`` / ``lsh_pairs_avoided``.  Docs in a
-    dropped bucket can still pair through their OTHER bands, so this
+    dropped bucket can still pair through their OTHER bands, so
+    ``lsh_pairs_avoided`` is exact integer arithmetic but only an
+    UPPER BOUND on the pairs actually removed, and this
     trades bounded recall loss on pathological buckets for a hard
     O(max_bucket_size^2)-per-bucket work bound — the knob a 100-TB
     run sets after ``lsh_star_edges``'s ``bucket_size`` diagnostic
@@ -247,9 +256,7 @@ def lsh_candidate_pairs(
         row = over.agg(
             F.count("*").alias("n"),
             F.max("_bsz").alias("mx"),
-            F.sum(F.col("_bsz") * (F.col("_bsz") - 1) / 2)
-            .cast("bigint")
-            .alias("avoided"),
+            F.sum(_bucket_pairs("_bsz")).alias("avoided"),
         ).collect()[0]
         if stats is not None:
             stats["lsh_oversized_buckets"] = int(row["n"])

@@ -16,7 +16,12 @@ Mechanism (Iceberg-shaped, parquet-backed in this sandbox):
   hidden ``bucket(conv_id, N)``-style transform and each batch commit
   is a snapshot)
 - after each bucket-batch commit, one lineage row per bucket is
-  appended to ``<out>/_lineage`` recording rows/chars/regions/refs
+  appended to ``<out>/_lineage`` recording rows/chars/regions/refs;
+  the rows are built on the driver from a JVM-only aggregate
+- invariant: Python tasks run only in the kernel stage.  Every other
+  stage of the job (input scan, shuffle, write, lineage aggregate) is
+  JVM-only, because each Python task pays a fixed worker set-up
+  however little it does
 - ``resume=True`` reads the lineage table and processes only buckets
   without a committed lineage row; re-running a partially-failed job
   is idempotent (dynamic partition overwrite replaces any partial
@@ -27,6 +32,7 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -111,6 +117,70 @@ def completed_buckets(
     return {r[0] for r in rows}
 
 
+# Per-bucket sums every lineage row carries, in column order.
+LINEAGE_SUMS = (
+    "rows_out",
+    "chars_in",
+    "chars_truncated",
+    "regions_found",
+    "sections_found",
+    "refs_matched",
+    "turns_errored",
+)
+# The lineage file schema, pinned in Arrow so the driver-side build
+# cannot drift between int32 and int64 with the Python values.
+LINEAGE_ARROW = pa.schema(
+    [("bucket", pa.int32())]
+    + [(c, pa.int64()) for c in LINEAGE_SUMS]
+    + [
+        ("n_buckets", pa.int32()),
+        ("bucket_hash_v", pa.int32()),
+        ("committed_at", pa.float64()),
+    ]
+)
+
+
+def _commit_lineage(
+    spark: SparkSession,
+    result: DataFrame,
+    batch: list[int],
+    n_buckets: int,
+    out_dir: str,
+) -> None:
+    """Append one lineage row per SCHEDULED bucket of ``batch``,
+    zero-filled for empty ones — a bucket with no input rows must still
+    commit, or resume would reprocess it forever.
+
+    Built on the driver: the aggregate over the persisted result is a
+    JVM-only job of at most ``len(batch)`` rows, and an Arrow table
+    becomes a ``LocalRelation``.  A list of tuples would go through
+    ``SparkContext.parallelize`` and cost a Python-worker stage per
+    batch for a handful of integers."""
+    agg = result.groupBy("bucket").agg(
+        F.count("*").alias("rows_out"),
+        F.sum("metrics.chars_in").alias("chars_in"),
+        F.sum("metrics.chars_truncated").alias("chars_truncated"),
+        F.sum("metrics.regions_found").alias("regions_found"),
+        F.sum("metrics.sections_found").alias("sections_found"),
+        F.sum("metrics.refs_matched").alias("refs_matched"),
+        F.sum(F.when(F.col("page_count") < 0, 1).otherwise(0)).alias(
+            "turns_errored"
+        ),
+    )
+    got = {r["bucket"]: r.asDict() for r in agg.collect()}
+    zero = dict.fromkeys(LINEAGE_SUMS, 0)
+    cols = {"bucket": batch}
+    for c in LINEAGE_SUMS:
+        # a NULL sum (all inputs NULL) commits as 0, like a missing bucket
+        cols[c] = [got.get(b, zero)[c] or 0 for b in batch]
+    cols["n_buckets"] = [n_buckets] * len(batch)
+    cols["bucket_hash_v"] = [BUCKET_HASH_V] * len(batch)
+    cols["committed_at"] = [time.time()] * len(batch)
+    spark.createDataFrame(pa.table(cols, schema=LINEAGE_ARROW)).write.mode(
+        "append"
+    ).parquet(f"{out_dir}/{LINEAGE_SUBDIR}")
+
+
 def run_extraction_job(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -179,9 +249,12 @@ def run_extraction_job(
             # benchmark (1,200 turns, 64 buckets, 4 cores) and
             # rejected:
             # - one task per bucket: 30% slower; every PySpark task
-            #   pays ~0.2 CPU-s of worker set-up however few rows it
-            #   has (setup_spark_files -> importlib.invalidate_caches()
-            #   re-reads pyspark.zip);
+            #   pays a fixed worker set-up however few rows it has —
+            #   setup_spark_files -> importlib.invalidate_caches(),
+            #   which on CPython 3.11 re-reads pyspark.zip's directory
+            #   once per cached zipimporter (profiled: 16 importers,
+            #   26.7k entries, ~0.25 CPU-s per task even for an
+            #   identity mapInArrow);
             # - repartitionByRange: no faster than hash, and it adds
             #   a sampling job;
             # - no persist, lineage read back from the committed
@@ -195,58 +268,7 @@ def run_extraction_job(
                 result.write.mode("overwrite").partitionBy(
                     "bucket"
                 ).parquet(out_dir)
-
-                agg = result.groupBy("bucket").agg(
-                    F.count("*").alias("rows_out"),
-                    F.sum("metrics.chars_in").alias("chars_in"),
-                    F.sum("metrics.chars_truncated").alias(
-                        "chars_truncated"
-                    ),
-                    F.sum("metrics.regions_found").alias("regions_found"),
-                    F.sum("metrics.sections_found").alias(
-                        "sections_found"
-                    ),
-                    F.sum("metrics.refs_matched").alias("refs_matched"),
-                    F.sum(
-                        F.when(F.col("page_count") < 0, 1).otherwise(0)
-                    ).alias("turns_errored"),
-                )
-                # one lineage row per SCHEDULED bucket, zero-filled for
-                # empty ones — a bucket with no input rows must still
-                # commit, or resume would reprocess it forever
-                sched = spark.createDataFrame(
-                    [(int(b),) for b in batch], "bucket int"
-                )
-                zero = F.lit(0).cast("bigint")
-                lineage = (
-                    sched.join(agg, "bucket", "left")
-                    .select(
-                        "bucket",
-                        F.coalesce("rows_out", zero).alias("rows_out"),
-                        F.coalesce("chars_in", zero).alias("chars_in"),
-                        F.coalesce("chars_truncated", zero).alias(
-                            "chars_truncated"
-                        ),
-                        F.coalesce("regions_found", zero).alias(
-                            "regions_found"
-                        ),
-                        F.coalesce("sections_found", zero).alias(
-                            "sections_found"
-                        ),
-                        F.coalesce("refs_matched", zero).alias(
-                            "refs_matched"
-                        ),
-                        F.coalesce("turns_errored", zero).alias(
-                            "turns_errored"
-                        ),
-                    )
-                    .withColumn("n_buckets", F.lit(n_buckets))
-                    .withColumn("bucket_hash_v", F.lit(BUCKET_HASH_V))
-                    .withColumn("committed_at", F.lit(time.time()))
-                )
-                lineage.write.mode("append").parquet(
-                    f"{out_dir}/{LINEAGE_SUBDIR}"
-                )
+                _commit_lineage(spark, result, batch, n_buckets, out_dir)
             finally:
                 result.unpersist()
     finally:

@@ -103,9 +103,16 @@ def _check_params(spark, bloom_dir: str, n_bits: int, n_hashes: int) -> None:
                     f"point at a fresh bloom_dir"
                 )
             return
-    spark.createDataFrame(
-        [(n_bits, n_hashes)], "n_bits bigint, n_hashes bigint"
-    ).write.mode("overwrite").parquet(path)
+    # an Arrow table becomes a LocalRelation; a list of tuples would
+    # go through SparkContext.parallelize and run a Python-worker
+    # stage to write one row
+    import pyarrow as pa
+
+    params = pa.table(
+        {"n_bits": [n_bits], "n_hashes": [n_hashes]},
+        schema=pa.schema([("n_bits", pa.int64()), ("n_hashes", pa.int64())]),
+    )
+    spark.createDataFrame(params).write.mode("overwrite").parquet(path)
 
 
 # Density past which the accumulated filter is warned saturated: at

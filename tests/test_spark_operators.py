@@ -1351,6 +1351,24 @@ def test_lsh_max_bucket_size_caps_distinct_text_mega_bucket(spark):
     assert capped < stats["lsh_pairs_avoided"]
 
 
+def test_lsh_pairs_avoided_exact_past_2_53(spark):
+    """The avoided-pair count of a bucket of B docs is B * (B - 1) / 2
+    in bigint.  For B = 2^27 + 3 the count is odd and above 2^53, where
+    the double arithmetic it used to go through is off by one."""
+    big = 2**27 + 3
+    want = big * (big - 1) // 2
+    assert want % 2 == 1 and want > 2**53
+    sizes = spark.range(1).select(F.lit(big).cast("bigint").alias("_bsz"))
+    got = sizes.agg(
+        F.sum(dedup._bucket_pairs("_bsz")).alias("exact"),
+        F.sum(F.col("_bsz") * (F.col("_bsz") - 1) / 2)
+        .cast("bigint")
+        .alias("double"),
+    ).first()
+    assert got["exact"] == want
+    assert got["double"] != want
+
+
 def test_near_dup_dedup_max_bucket_size_keeps_output_shape(spark):
     """The cap threads through near_dup_dedup: with a tiny cap on a
     perturbed-boilerplate corpus the pipeline still returns exactly

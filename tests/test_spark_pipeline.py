@@ -780,6 +780,77 @@ def test_crash_resume_exactly_once_clustered(spark, tmp_path, monkeypatch):
     assert {r["bucket"]: r["refs_matched"] for r in lin} == want_refs
 
 
+def test_job_runs_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The job's only Python tasks are the kernel's: nothing in it goes
+    through SparkContext.parallelize, whose LogicalRDD would run a
+    Python-worker stage per batch (the lineage zero-fill used to)."""
+    import pyspark
+
+    from pdfextract_spark.sinks import run_extraction_job
+
+    t = make_transcripts(spark).persist()
+    try:
+        n = t.count()
+
+        def no_rdd(*a, **kw):
+            raise AssertionError("SparkContext.parallelize called")
+
+        monkeypatch.setattr(pyspark.SparkContext, "parallelize", no_rdd)
+        lineage = run_extraction_job(
+            spark, t, str(tmp_path / "out"), n_buckets=8,
+            buckets_per_batch=4, resume=False,
+        )
+        assert lineage.agg(F.sum("rows_out")).first()[0] == n
+    finally:
+        t.unpersist()
+
+
+def test_lineage_schema_pinned_and_zero_filled(spark, tmp_path):
+    """The driver-built lineage keeps the file schema exactly (no
+    int32/int64 drift), counts a poison turn under on_error='skip',
+    and commits an all-zero row for a scheduled bucket with no input
+    rows."""
+    from pdfextract_spark.settings import Settings, Typesetter
+    from pdfextract_spark.sinks import (
+        LINEAGE_SUMS,
+        run_extraction_job,
+        with_bucket,
+    )
+
+    # title_size=0 detonates only on multi-paragraph turns: TEXTS[0]
+    # is the one poison turn, the single-paragraph ones extract
+    rows = [("c0", 0, "user", TEXTS[0])] + [
+        ("c1", i, "user", TEXTS[1]) for i in range(1, 4)
+    ]
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string"
+    )
+    poison = Settings(typesetter=Typesetter(title_size=0.0))
+    lineage = run_extraction_job(
+        spark, t, str(tmp_path / "out"), settings=poison, n_buckets=8,
+        buckets_per_batch=4, resume=False, on_error="skip",
+    )
+    assert lineage.schema.simpleString() == (
+        "struct<bucket:int,rows_out:bigint,chars_in:bigint,"
+        "chars_truncated:bigint,regions_found:bigint,"
+        "sections_found:bigint,refs_matched:bigint,turns_errored:bigint,"
+        "n_buckets:int,bucket_hash_v:int,committed_at:double>"
+    )
+    lin = {r["bucket"]: r for r in lineage.collect()}
+    assert sorted(lin) == list(range(8))
+    assert sum(r["rows_out"] for r in lin.values()) == len(rows)
+    assert sum(r["turns_errored"] for r in lin.values()) == 1
+    poison_bucket = with_bucket(t, 8).where("turn_idx = 0").first()["bucket"]
+    assert lin[poison_bucket]["turns_errored"] == 1
+
+    used = {r["bucket"] for r in with_bucket(t, 8).collect()}
+    empty = sorted(set(range(8)) - used)
+    assert empty  # 4 turns cannot fill 8 buckets
+    for b in empty:
+        assert all(lin[b][c] == 0 for c in LINEAGE_SUMS), lin[b]
+        assert lin[b]["n_buckets"] == 8
+
+
 def test_write_table_iceberg_rejects_unsupported_modes(spark, tmp_path):
     """writeTo has no 'ignore'/'errorifexists' analogue; the Iceberg
     branch used to silently APPEND for those modes."""
