@@ -121,7 +121,25 @@ def minhash_bands(
     ``min`` aggregation collapses to one row per doc per partition
     before the single shuffle.  (The naive nested-expression form
     recomputes the shingle array once per seed — 16x the hashing — and
-    defeats whole-stage codegen with a giant expression tree.)"""
+    defeats whole-stage codegen with a giant expression tree.)  The
+    body is ``_band_rows``, which ``lsh_jaccard_pairs`` also runs over
+    its shingle table of DISTINCT shingles: a min over the distinct
+    shingles equals the min over all of them, so both paths give the
+    same signatures and band hashes."""
+    return _band_rows(
+        df, id_col, word_shingles(F.col(text_col), k), num_hashes, band_size
+    )
+
+
+def _band_rows(
+    df: DataFrame,
+    id_col: str,
+    shingles: Column,
+    num_hashes: int,
+    band_size: int,
+) -> DataFrame:
+    """(id, band, band_hash) from ``shingles``, an array column over
+    ``df`` (see ``minhash_bands``)."""
     if band_size <= 0 or num_hashes % band_size != 0:
         raise ValueError(
             f"num_hashes={num_hashes} must be a positive multiple of "
@@ -131,9 +149,7 @@ def minhash_bands(
             f"candidate pairs at all, with no error"
         )
     n_bands = num_hashes // band_size
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), k)).alias("sh")
-    )
+    sh = df.select(F.col(id_col), F.explode(shingles).alias("sh"))
     # project each salt's md5 ONCE before the aggregation: Catalyst
     # does not common-subexpression-eliminate the md5 across the
     # num_hashes min() aggregates, so aggregating _mh_expr directly
@@ -233,7 +249,24 @@ def lsh_candidate_pairs(
     ``release_fence`` after consuming the result, or pass
     ``fence=False`` to keep pure lineage (streaming / fault-tolerant
     callers) at the re-evaluation cost."""
-    bands = minhash_bands(df, text_col, id_col, **kw)
+    return _candidate_pairs(
+        minhash_bands(df, text_col, id_col, **kw),
+        id_col,
+        fence,
+        max_bucket_size,
+        stats,
+    )
+
+
+def _candidate_pairs(
+    bands: DataFrame,
+    id_col: str,
+    fence: bool,
+    max_bucket_size: int | None,
+    stats: dict | None,
+) -> DataFrame:
+    """The fence, bucket cap and band self-join of
+    ``lsh_candidate_pairs``, over a ``_band_rows`` table."""
     if fence:
         bands = _fence(bands)
     if max_bucket_size is not None:
@@ -278,7 +311,7 @@ def lsh_candidate_pairs(
                 f"bands.  Inspect lsh_star_edges(...)'s bucket_size to "
                 f"understand the distribution.",
                 UserWarning,
-                stacklevel=2,
+                stacklevel=3,
             )
             # the collected count says whether the oversized-key set
             # fits a broadcast (it almost always does — each key holds
@@ -373,14 +406,30 @@ def jaccard_pairs(
     """Exact k-shingle Jaccard for candidate pairs (verify stage after
     LSH).  Joins are broadcast-eligible when the candidate set is
     small; array_intersect/array_union stay JVM-side.  The shingle
-    table is materialized once (checkpoint fence) — it is joined
-    as both sides, and CollapseProject would otherwise re-shingle the
-    corpus twice (lifetime/opt-out story: operators/fence.py)."""
-    sh = df.select(
-        F.col(id_col), F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh")
-    )
+    table (``_shingle_table``) is materialized once (checkpoint fence)
+    — it is joined as both sides, and CollapseProject would otherwise
+    re-shingle the corpus twice (lifetime/opt-out story:
+    operators/fence.py).  When the candidates come from LSH over the
+    same corpus, ``lsh_jaccard_pairs`` shares that one shingle table
+    with the banding instead of shingling the corpus a second time."""
+    sh = _shingle_table(df, text_col, id_col, k)
     if fence:
         sh = _fence(sh)
+    return _jaccard_verify(sh, pairs, id_col)
+
+
+def _shingle_table(
+    df: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """(id, sh): each doc's DISTINCT k-word shingles — the set the
+    Jaccard verify compares, and a valid MinHash input."""
+    return df.select(
+        F.col(id_col), F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh")
+    )
+
+
+def _jaccard_verify(sh: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """(a, b, jaccard) for ``pairs`` from a ``_shingle_table``."""
     a = sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a")
     b = sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b")
     joined = pairs.join(a, "a").join(b, "b")
@@ -391,6 +440,35 @@ def jaccard_pairs(
         "b",
         F.when(union == 0, F.lit(0.0)).otherwise(inter / union).alias("jaccard"),
     )
+
+
+def lsh_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    fence: bool = True,
+    max_bucket_size: int | None = None,
+    stats: dict | None = None,
+    num_hashes: int = 16,
+    band_size: int = 4,
+    k: int = 3,
+) -> DataFrame:
+    """``jaccard_pairs(df, lsh_candidate_pairs(df, ...))`` with the
+    corpus shingled ONCE: a single fenced ``_shingle_table`` feeds both
+    the MinHash banding and the Jaccard verify, where the composition
+    shingles every text twice behind two fences.  Same (a, b, jaccard)
+    rows, bit for bit — MinHash over the distinct shingles equals
+    MinHash over all of them — and the same ``fence``,
+    ``max_bucket_size`` and ``stats`` semantics as
+    ``lsh_candidate_pairs`` (the cap runs on the band table).  The
+    shingle table's partitions are the input's, so its stages run one
+    task per input partition."""
+    sh = _shingle_table(df, text_col, id_col, k)
+    if fence:
+        sh = _fence(sh)
+    bands = _band_rows(sh, id_col, F.col("sh"), num_hashes, band_size)
+    pairs = _candidate_pairs(bands, id_col, fence, max_bucket_size, stats)
+    return _jaccard_verify(sh, pairs, id_col)
 
 
 # Token bit j reads nibble (j % 32) of ONE md5 per token: bits 0-31
@@ -1173,18 +1251,28 @@ def near_dup_dedup(
     ``lsh_star_edges`` for its ``bucket_size`` diagnostic when the
     distribution is in doubt, then set the cap.
 
-    Storage lifetime: the exact-group table (one narrow row per
-    DISTINCT text — the deduped corpus, small exactly where this
-    operator matters) is fenced here, and the sub-operators fence
-    their self-joined intermediates (band + shingle tables) — wrap
-    the call in ``fence.fence_scope()`` to release those blocks after
-    consuming the result.  ``fence=False`` keeps pure lineage for the
-    exact-group/LSH stages ONLY: the connected-components closure
-    ALWAYS checkpoints per round regardless (iterative pointer
-    jumping without truncation grows an exponential plan — there is
-    no recomputable form), so even fence=False callers should use
-    ``fence_scope()`` to release the CC rounds' blocks."""
-    k = lsh_kw.get("k", 3)
+    Storage lifetime and parallelism: ``fence=True`` materializes
+    three tables behind checkpoint fences, in this order —
+    the exact-group table (one narrow row per DISTINCT text: the
+    deduped corpus, small exactly where this operator matters); the
+    canonicals' shingle table (``lsh_jaccard_pairs``: shingled once,
+    feeding both MinHash banding and the Jaccard verify); and the band
+    table the LSH self-join reads.  Wrap the call in
+    ``fence.fence_scope()`` to release those blocks after consuming
+    the result.  The exact-group table is hash-repartitioned by
+    canonical id into ``defaultParallelism`` partitions before its
+    fence: its groupBy shuffle is small (about 0.5 MB for 1,550 docs),
+    so AQE would coalesce it into ONE partition, and the fence would
+    freeze that — every per-canonical stage after it (shingling, the
+    md5s of the banding) would run as one task on one core.  A
+    repartition with an explicit count is never coalesced by AQE, so
+    those stages run one task per core.  ``fence=False`` keeps pure
+    lineage for the exact-group/LSH stages ONLY: the
+    connected-components closure ALWAYS checkpoints per round
+    regardless (iterative pointer jumping without truncation grows an
+    exponential plan — there is no recomputable form), so even
+    fence=False callers should use ``fence_scope()`` to release the CC
+    rounds' blocks."""
     # NULL-safe group key: md5(NULL) is NULL, and a NULL key would
     # survive the groupBy but never match the equi-join below — the
     # NULL-text docs would silently vanish from the output.  "null" is
@@ -1205,7 +1293,7 @@ def near_dup_dedup(
     groups = withh.groupBy("_th").agg(
         F.min(id_col).alias("_keep"),
         F.min_by(text_col, id_col).alias("_ktext"),
-    )
+    ).repartition(df.sparkSession.sparkContext.defaultParallelism, "_keep")
     if fence:
         groups = _fence(groups)
     # (doc, canonical-of-its-exact-group); the join key is the 32-hex
@@ -1217,7 +1305,7 @@ def near_dup_dedup(
     canon = groups.select(
         F.col("_keep").alias(id_col), F.col("_ktext").alias(text_col)
     )
-    pairs = lsh_candidate_pairs(
+    verified = lsh_jaccard_pairs(
         canon,
         text_col,
         id_col,
@@ -1225,9 +1313,6 @@ def near_dup_dedup(
         max_bucket_size=max_bucket_size,
         stats=stats,
         **lsh_kw,
-    )
-    verified = jaccard_pairs(
-        canon, pairs, text_col, id_col, k=k, fence=fence
     ).where(F.col("jaccard") >= jaccard_threshold)
     comp = connected_components(
         verified, "a", "b", max_iter=max_iter, stats=stats

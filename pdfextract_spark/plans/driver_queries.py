@@ -3032,17 +3032,14 @@ _CC_CORPUS_SQL = """
 )
 def dedup_duplicate_clusters(spark, sf_dir):
     """Duplicate CLUSTERS, not just pairs: LSH candidates -> exact
-    Jaccard >= 0.5 verify -> connected components via min-label
-    propagation (operators/dedup.connected_components).  Production
-    dedup keeps one representative per component (rep_doc = min id);
-    the synthesized corpus plants 2- and 3-member mirror groups since
-    the driver documents are all unique.  The recursive-CTE oracle
-    computes the same transitive closure."""
-    from ..operators.dedup import (
-        connected_components,
-        jaccard_pairs,
-        lsh_candidate_pairs,
-    )
+    Jaccard >= 0.5 verify (one shingle table feeds both:
+    operators/dedup.lsh_jaccard_pairs) -> connected components via
+    min-label propagation (operators/dedup.connected_components).
+    Production dedup keeps one representative per component (rep_doc =
+    min id); the synthesized corpus plants 2- and 3-member mirror
+    groups since the driver documents are all unique.  The
+    recursive-CTE oracle computes the same transitive closure."""
+    from ..operators.dedup import connected_components, lsh_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = (
@@ -3067,8 +3064,9 @@ def dedup_duplicate_clusters(spark, sf_dir):
     corpus = _spread(spark, corpus).where(
         F.size(F.split(dedup.normalize_text(F.col("text")), " ")) >= 3
     )
-    cand = lsh_candidate_pairs(corpus, num_hashes=16, band_size=4, k=3)
-    edges = jaccard_pairs(corpus, cand, k=3).where(F.col("jaccard") >= 0.5)
+    edges = lsh_jaccard_pairs(corpus, num_hashes=16, band_size=4, k=3).where(
+        F.col("jaccard") >= 0.5
+    )
     comp = connected_components(edges)
     return comp.groupBy("comp").agg(
         F.count("*").cast("int").alias("cluster_size"),

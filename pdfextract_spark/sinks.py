@@ -155,7 +155,10 @@ def _commit_lineage(
     JVM-only job of at most ``len(batch)`` rows, and an Arrow table
     becomes a ``LocalRelation``.  A list of tuples would go through
     ``SparkContext.parallelize`` and cost a Python-worker stage per
-    batch for a handful of integers."""
+    batch for a handful of integers.  The write is coalesced to one
+    file: a ``LocalRelation`` scans as one partition per row up to
+    ``defaultParallelism``, which wrote that many tiny files per
+    batch."""
     agg = result.groupBy("bucket").agg(
         F.count("*").alias("rows_out"),
         F.sum("metrics.chars_in").alias("chars_in"),
@@ -176,9 +179,9 @@ def _commit_lineage(
     cols["n_buckets"] = [n_buckets] * len(batch)
     cols["bucket_hash_v"] = [BUCKET_HASH_V] * len(batch)
     cols["committed_at"] = [time.time()] * len(batch)
-    spark.createDataFrame(pa.table(cols, schema=LINEAGE_ARROW)).write.mode(
-        "append"
-    ).parquet(f"{out_dir}/{LINEAGE_SUBDIR}")
+    spark.createDataFrame(pa.table(cols, schema=LINEAGE_ARROW)).coalesce(
+        1
+    ).write.mode("append").parquet(f"{out_dir}/{LINEAGE_SUBDIR}")
 
 
 def run_extraction_job(

@@ -231,3 +231,29 @@ def test_near_dup_dedup_null_text_docs_survive(spark):
     # empty string is its OWN group (distinct from NULL)
     assert out[4] == (4, True)
     assert out[1] == (1, True)
+
+
+def test_near_dup_dedup_per_canonical_stages_use_every_core(spark):
+    """The exact-group table's groupBy shuffle is tiny, so AQE would
+    coalesce it into one partition and its fence would freeze that:
+    every per-canonical stage after it (shingling, MinHash md5s) would
+    run as one task.  Both the exact-group fence and the canonicals'
+    shingle fence must hold at least one partition per core."""
+    rows = [
+        (i, f"document {i % 150} about topic {i % 7} with shared words "
+            f"alpha beta gamma delta epsilon")
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    cores = spark.sparkContext.defaultParallelism
+    with fence_scope(blocking=True) as frames:
+        out = dedup.near_dup_dedup(
+            df, jaccard_threshold=0.5, num_hashes=8, band_size=4, k=3
+        ).collect()
+        parts = {
+            tuple(f.columns): f.rdd.getNumPartitions() for f in frames
+        }
+    assert len(out) == len(rows)
+    groups = parts[("_th", "_keep", "_ktext")]
+    shingles = parts[("doc_id", "sh")]
+    assert groups >= cores and shingles >= cores, parts

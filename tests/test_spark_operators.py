@@ -129,6 +129,9 @@ def test_lsh_candidates_find_near_dups(spark):
     ).collect()
     j12 = [r["jaccard"] for r in jac if (r["a"], r["b"]) == (1, 2)][0]
     assert j12 > 0.5
+    # the shingle-once path returns the composition's rows exactly
+    once = dedup.lsh_jaccard_pairs(df, num_hashes=16, band_size=4, k=3)
+    assert sorted(once.collect()) == sorted(jac)
 
 
 def test_simhash_near_dup_low_hamming(spark):
@@ -1250,14 +1253,19 @@ def test_near_dup_dedup_end_to_end_matches_brute_force(spark):
     """The composed pipeline (LSH -> Jaccard verify -> components ->
     canonical winners) equals a driver-side brute-force O(n^2) Jaccard
     clustering on a corpus with exact dupes, near dupes (high-Jaccard
-    LSH-collides), and distinct docs."""
+    LSH-collides), and distinct docs.  Docs 6 and 7 repeat their
+    shingles, so MinHash over each doc's DISTINCT shingles (the shared
+    shingle table) is checked against the set-based brute force."""
     base = "the quick brown fox jumps over the lazy dog again and again today"
+    loop = "spam eggs and ham " * 4 + "with toast and jam"
     rows = [
         (1, base),
         (2, base.replace("today", "tomorrow")),
         (3, base),
         (4, "completely unrelated content about database engines and plans"),
         (5, "another thoroughly different document on streaming watermarks"),
+        (6, loop),
+        (7, loop.replace("jam", "tea")),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     out = {

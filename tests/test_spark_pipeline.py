@@ -808,10 +808,11 @@ def test_job_runs_no_python_rdd(spark, tmp_path, monkeypatch):
 def test_lineage_schema_pinned_and_zero_filled(spark, tmp_path):
     """The driver-built lineage keeps the file schema exactly (no
     int32/int64 drift), counts a poison turn under on_error='skip',
-    and commits an all-zero row for a scheduled bucket with no input
-    rows."""
+    commits an all-zero row for a scheduled bucket with no input rows,
+    and writes one lineage file per committed batch."""
     from pdfextract_spark.settings import Settings, Typesetter
     from pdfextract_spark.sinks import (
+        LINEAGE_SUBDIR,
         LINEAGE_SUMS,
         run_extraction_job,
         with_bucket,
@@ -849,6 +850,10 @@ def test_lineage_schema_pinned_and_zero_filled(spark, tmp_path):
     for b in empty:
         assert all(lin[b][c] == 0 for c in LINEAGE_SUMS), lin[b]
         assert lin[b]["n_buckets"] == 8
+
+    # 8 buckets in batches of 4: two commits, one file each
+    files = list((tmp_path / "out" / LINEAGE_SUBDIR).glob("part-*.parquet"))
+    assert len(files) == 2, sorted(f.name for f in files)
 
 
 def test_write_table_iceberg_rejects_unsupported_modes(spark, tmp_path):

@@ -445,12 +445,9 @@ def main() -> None:
                 stats=stats,
             ).cache()
         elif query == "clusters":
-            cand = dedup.lsh_candidate_pairs(
+            edges = dedup.lsh_jaccard_pairs(
                 corpus, num_hashes=16, band_size=4, k=3
-            )
-            edges = dedup.jaccard_pairs(corpus, cand, k=3).where(
-                F.col("jaccard") >= 0.5
-            )
+            ).where(F.col("jaccard") >= 0.5)
             comp = dedup.connected_components(edges, stats=stats)
             # pairwise path emits only docs with >= 1 verified edge;
             # normalize to the near-dup output shape (absent docs keep
