@@ -129,6 +129,8 @@ def run_extraction(spark, sf_dir: str, turns_per_doc: int):
     stages, so steady-state throughput is the meaningful number —
     interpreter cold-start would otherwise dominate short local runs
     and scale WITH core count, inverting any scaling measurement."""
+    from pyspark.sql import functions as F
+
     from pdfextract_spark.plans import extract
     from pdfextract_spark.sources import synth_transcripts
 
@@ -140,17 +142,18 @@ def run_extraction(spark, sf_dir: str, turns_per_doc: int):
     warm = t.limit(cores * 8).repartition(cores)
     extract(warm).write.format("noop").mode("overwrite").save()
 
+    balanced = t.repartition(
+        max(cores * 4, 32), F.xxhash64("conv_id", "turn_idx")
+    )
     t0 = time.time()
-    extract(t, repartition=max(cores * 4, 32)).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    extract(balanced).write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
 
     # references+title projection (S8): the slimmer output row is the
     # configuration a refs-harvesting pipeline would run
     t0 = time.time()
     extract(
-        t, repartition=max(cores * 4, 32), want=("references", "title")
+        balanced, want=("references", "title")
     ).write.format("noop").mode("overwrite").save()
     dt_refs = time.time() - t0
     t.unpersist()

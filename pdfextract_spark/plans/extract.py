@@ -6,14 +6,17 @@ chars -> chunks -> regions -> margins -> zones -> columns -> sections
 -> titles -> references cascade is a pure function of one row's text.
 The plan is therefore a single narrow ``mapInArrow`` over the
 transcript table: **zero shuffles**, no driver collection, perfectly
-linear scaling with executors.  Explicit ``repartition`` by
-``xxhash64(conv_id, turn_idx)`` balances input splits when the source
-layout is skewed (long conversations landing in one file).
+linear scaling with executors.  It runs on the input's partitioning as
+given: a caller whose source layout is skewed (long conversations
+landing in one file) rebalances it first, e.g. by
+``xxhash64(conv_id, turn_idx)``, and the job sink
+(``sinks.run_extraction_job``) clusters each batch by bucket itself.
 
 Arrow batches cross the JVM/Python boundary once; inside the batch the
 per-turn kernel (core/pipeline.py) does the sequential merges the
 reference defines (the parts Catalyst cannot express without semantic
-drift — SURVEY.md §4).
+drift — SURVEY.md §4), and each artifact is rendered into its column
+from its ``RESULT_SCHEMA`` type (``_renderer``).
 """
 
 from __future__ import annotations
@@ -30,8 +33,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import extract_turn, render_turn  # noqa: F401 (render_turn: oracle path)
+from ..core import extract_turn
 from ..core.language import transliterate
+from ..core.spatial import get_text_content
 from ..settings import DEFAULT, Settings
 
 _D = DoubleType()
@@ -60,7 +64,8 @@ REGION_T = StructType(
     ]
 )
 
-COMPONENT_T = StructType(
+# a page-located bounding box: a column, or one region a section merged
+BOX_T = StructType(
     [
         StructField("x", _D),
         StructField("y", _D),
@@ -83,30 +88,11 @@ SECTION_T = StructType(
         StructField("line_height", _D),
         StructField("font", _S),
         StructField("lines", ArrayType(LINE_T)),
-        StructField("components", ArrayType(COMPONENT_T)),
+        StructField("components", ArrayType(BOX_T)),
     ]
 )
 
-ZONE_T = StructType(
-    [
-        StructField("zone", _S),
-        StructField("x", _D),
-        StructField("y", _D),
-        StructField("width", _D),
-        StructField("height", _D),
-        StructField("page", _I),
-    ]
-)
-
-COLUMN_T = StructType(
-    [
-        StructField("x", _D),
-        StructField("y", _D),
-        StructField("width", _D),
-        StructField("height", _D),
-        StructField("page", _I),
-    ]
-)
+ZONE_T = StructType([StructField("zone", _S), *BOX_T.fields])
 
 TITLE_T = StructType(
     [
@@ -135,16 +121,7 @@ CHUNK_T = StructType(
 
 CHAR_T = CHUNK_T  # same shape; content is a single glyph
 
-MARGIN_T = StructType(
-    [
-        StructField("side", _S),
-        StructField("x", _D),
-        StructField("y", _D),
-        StructField("width", _D),
-        StructField("height", _D),
-        StructField("page", _I),
-    ]
-)
+MARGIN_T = StructType([StructField("side", _S), *BOX_T.fields])
 
 METRICS_T = StructType(
     [
@@ -165,7 +142,7 @@ RESULT_SCHEMA = StructType(
         StructField("title", TITLE_T),
         StructField("regions", ArrayType(REGION_T)),
         StructField("zones", ArrayType(ZONE_T)),
-        StructField("columns", ArrayType(COLUMN_T)),
+        StructField("columns", ArrayType(BOX_T)),
         StructField("sections", ArrayType(SECTION_T)),
         StructField("references", ArrayType(REFERENCE_T)),
         StructField("characters", ArrayType(CHAR_T)),
@@ -176,79 +153,78 @@ RESULT_SCHEMA = StructType(
 )
 
 
-def _ident(v):
-    return v
+def _renderer(t, rnd, tx, name: str = ""):
+    """The canonical sink transform (SURVEY.md S5) for a value of Spark
+    type ``t``, built once per stage: every double is rounded
+    (xml_view.rb:24-29), every ``content`` string transliterated
+    (xml_view.rb:92-94), arrays and structs are walked, anything else
+    is copied.  A missing array renders as ``[]``, a missing struct as
+    ``None``."""
+    if isinstance(t, ArrayType):
+        element = _renderer(t.elementType, rnd, tx)
+        return lambda v: [element(x) for x in v or ()]
+    if isinstance(t, StructType):
+        fields = [(f.name, _renderer(f.dataType, rnd, tx, f.name)) for f in t]
+        return lambda v: None if v is None else {
+            k: render(v.get(k)) for k, render in fields
+        }
+    if isinstance(t, DoubleType):
+        return rnd
+    if name == "content":
+        return tx
+    return lambda v: v
 
 
-def _region_row(r: dict, rnd=_ident, tx=_ident) -> dict:
-    """Schema-aware render: rounding (xml_view.rb:24-29) and content
-    transliteration (xml_view.rb:92-94) applied per known field — much
-    cheaper than a generic deep walk at millions of turns."""
-    return {
-        "x": rnd(r["x"]),
-        "y": rnd(r["y"]),
-        "width": rnd(r["width"]),
-        "height": rnd(r["height"]),
-        "line_height": rnd(r["line_height"]),
-        "font": r["font"],
-        "page": r["page"],
-        "lines": [
-            {
-                "content": tx(l["content"]),
-                "x_offset": rnd(l["x_offset"]),
-                "y_offset": rnd(l["y_offset"]),
-                "spacing": rnd(l["spacing"]),
-            }
-            for l in r.get("lines", [])
-        ],
-    }
+# the artifacts whose column is not the kernel's value as is
+_SOURCES = {
+    "zones": lambda res: [dict(z, zone=z["group"]) for z in res.get("zones") or ()],
+    "sections": lambda res: [
+        dict(s, content=get_text_content(s)) for s in res.get("sections") or ()
+    ],
+    "chunks": lambda res: [
+        c for _, cs in sorted((res.get("chunks") or {}).items()) for c in cs
+    ],
+    "margins": lambda res: [
+        dict(m, side=side)
+        for _, ms in sorted((res.get("margins") or {}).items())
+        for side, m in ms.items()
+    ],
+}
 
 
-def _section_row(s: dict, content: str, rnd=_ident, tx=_ident) -> dict:
-    return {
-        "content": tx(content),
-        "letter_ratio": rnd(s["letter_ratio"]),
-        "year_ratio": rnd(s["year_ratio"]),
-        "cap_ratio": rnd(s["cap_ratio"]),
-        "name_ratio": rnd(s["name_ratio"]),
-        "word_count": s["word_count"],
-        "lateness": rnd(s["lateness"]),
-        "reference_score": rnd(s["reference_score"]),
-        "line_height": rnd(s.get("line_height")),
-        "font": s.get("font"),
-        "lines": [
-            {
-                "content": tx(l["content"]),
-                "x_offset": rnd(l["x_offset"]),
-                "y_offset": rnd(l["y_offset"]),
-                "spacing": rnd(l["spacing"]),
-            }
-            for l in s.get("lines", [])
-        ],
-        "components": [
-            {
-                "x": rnd(c["x"]),
-                "y": rnd(c["y"]),
-                "width": rnd(c["width"]),
-                "height": rnd(c["height"]),
-                "page": c["page"],
-            }
-            for c in s.get("components", [])
-        ],
-    }
+def run_turn(conv_id, turn_idx, text, settings: Settings, want, on_error="fail"):
+    """``extract_turn`` for one input row.
 
-
-def _chunk_row(c: dict, rnd=_ident, tx=_ident) -> dict:
-    return {
-        "x": rnd(c["x"]),
-        "y": rnd(c["y"]),
-        "width": rnd(c["width"]),
-        "height": rnd(c["height"]),
-        "line_height": rnd(c["line_height"]),
-        "content": tx(c["content"]),
-        "font": c["font"],
-        "page": c["page"],
-    }
+    With ``on_error="fail"`` a kernel exception, or a NULL ``turn_idx``
+    (permissive JSON reads keep malformed rows as all-NULL), raises an
+    error naming the row, so a failure in a 10^12-turn job is
+    attributable without bisection.  With ``"skip"`` a failed turn
+    yields the sentinel result ``extract`` documents."""
+    try:
+        res = extract_turn(text or "", settings, want=want)
+    except Exception as exc:
+        if on_error == "fail":
+            raise RuntimeError(
+                f"extraction failed for conv_id={conv_id!r} "
+                f"turn_idx={turn_idx}: {type(exc).__name__}: {exc}"
+            ) from exc
+        res = {
+            "page_count": -1,
+            "metrics": {
+                "chars_in": len(text or ""),
+                "chars_truncated": 0,
+                "regions_found": 0,
+                "sections_found": 0,
+                "refs_matched": 0,
+            },
+        }
+    if turn_idx is None and on_error == "fail":
+        raise RuntimeError(
+            f"NULL turn_idx for conv_id={conv_id!r} "
+            f"(malformed input row — permissive read?); clean the input "
+            f"or, for extract(), pass on_error='skip'"
+        )
+    return res
 
 
 # DEFAULT_ARTIFACTS is what extract() emits when ``want`` is omitted
@@ -262,18 +238,15 @@ ARTIFACT_FIELDS = DEFAULT_ARTIFACTS + ("characters", "chunks", "margins")
 def extract(
     df: DataFrame,
     settings: Settings = DEFAULT,
-    rendered: bool = True,
-    repartition: int | None = None,
     want: tuple[str, ...] | None = None,
     on_error: str = "fail",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, ...) -> one result row
-    per turn with nested extraction artifacts.
-
-    ``rendered=True`` applies the canonical sink transform (2-dp
-    rounding + transliteration, xml_view.rb:24-29/92-94) so outputs
-    are fixture-comparable.
+    per turn with nested extraction artifacts, rendered from
+    ``RESULT_SCHEMA`` by the canonical sink transform (rounding to
+    ``settings.precision`` + transliteration, xml_view.rb:24-29/92-94)
+    so outputs are fixture-comparable.
 
     ``want`` projects the OUTPUT to a subset of artifact columns
     (SURVEY.md S8, the reference's explicit-only rendering): the
@@ -296,7 +269,6 @@ def extract(
     """
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    from ..core.spatial import get_text_content
 
     selected = DEFAULT_ARTIFACTS if want is None else tuple(want)
     unknown = [w for w in selected if w not in ARTIFACT_FIELDS]
@@ -334,10 +306,6 @@ def extract(
     )
 
     src = df.select("conv_id", "turn_idx", "role", "text", *carry)
-    if repartition:
-        src = src.repartition(
-            repartition, F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
-        )
 
     precision = settings.precision
 
@@ -352,13 +320,17 @@ def extract(
         per-turn kernel, emit typed RecordBatches directly.  Bypassing
         the pandas object path cuts serialization from ~10x kernel cost
         to a small constant (pa.array over python structs is C-side)."""
-        if rendered:
-            def rnd(v):
-                return None if v is None else round(v, precision)
+        def rnd(v):
+            return None if v is None else round(v, precision)
 
-            tx = transliterate
-        else:
-            rnd = tx = _ident
+        artifacts = [
+            (
+                name,
+                _SOURCES.get(name, lambda res, name=name: res.get(name)),
+                _renderer(RESULT_SCHEMA[name].dataType, rnd, transliterate),
+            )
+            for name in selected
+        ]
         kernel_want = tuple(
             {"title": "titles"}.get(k, k) for k in selected
         )
@@ -379,34 +351,9 @@ def extract(
             for conv_id, turn_idx, role, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"]
             ):
-                try:
-                    res = extract_turn(text or "", settings, want=kernel_want)
-                except Exception as exc:
-                    if on_error == "fail":
-                        raise RuntimeError(
-                            f"extraction failed for conv_id={conv_id!r} "
-                            f"turn_idx={turn_idx}: {type(exc).__name__}: {exc}"
-                        ) from exc
-                    res = {
-                        "page_count": -1,
-                        "metrics": {
-                            "chars_in": len(text or ""),
-                            "chars_truncated": 0,
-                            "regions_found": 0,
-                            "sections_found": 0,
-                            "refs_matched": 0,
-                        },
-                    }
-                # a NULL turn_idx (permissive JSON reads keep
-                # malformed rows as all-NULL) must obey on_error: the
-                # int() coercion sat OUTSIDE the kernel try, so one
-                # poison row killed the job even under 'skip'
-                if turn_idx is None and on_error == "fail":
-                    raise RuntimeError(
-                        f"NULL turn_idx for conv_id={conv_id!r} "
-                        f"(malformed input row — permissive read?); "
-                        f"clean the input or pass on_error='skip'"
-                    )
+                res = run_turn(
+                    conv_id, turn_idx, text, settings, kernel_want, on_error
+                )
                 cols["conv_id"].append(conv_id)
                 cols["turn_idx"].append(
                     None if turn_idx is None else int(turn_idx)
@@ -414,89 +361,8 @@ def extract(
                 cols["role"].append(role)
                 cols["page_count"].append(res["page_count"])
                 cols["metrics"].append(res["metrics"])
-                if "title" in selected:
-                    title = res.get("title")
-                    if title is not None:
-                        title = {
-                            "content": tx(title["content"]),
-                            "line_height": rnd(title["line_height"]),
-                            "font": title["font"],
-                        }
-                    cols["title"].append(title)
-                if "regions" in selected:
-                    cols["regions"].append(
-                        [_region_row(r, rnd, tx) for r in res.get("regions") or []]
-                    )
-                if "zones" in selected:
-                    cols["zones"].append(
-                        [
-                            {
-                                "zone": z["group"],
-                                "x": rnd(z["x"]),
-                                "y": rnd(z["y"]),
-                                "width": rnd(z["width"]),
-                                "height": rnd(z["height"]),
-                                "page": z["page"],
-                            }
-                            for z in res.get("zones") or []
-                        ]
-                    )
-                if "columns" in selected:
-                    cols["columns"].append(
-                        [
-                            {
-                                "x": rnd(c["x"]),
-                                "y": rnd(c["y"]),
-                                "width": rnd(c["width"]),
-                                "height": rnd(c["height"]),
-                                "page": c["page"],
-                            }
-                            for c in res.get("columns") or []
-                        ]
-                    )
-                if "sections" in selected:
-                    cols["sections"].append(
-                        [
-                            _section_row(s, get_text_content(s), rnd, tx)
-                            for s in res.get("sections") or []
-                        ]
-                    )
-                if "references" in selected:
-                    cols["references"].append(
-                        [
-                            {"content": tx(r["content"]), "order": r.get("order")}
-                            for r in res.get("references") or []
-                        ]
-                    )
-                if "characters" in selected:
-                    cols["characters"].append(
-                        [_chunk_row(c, rnd, tx) for c in res.get("characters") or []]
-                    )
-                if "chunks" in selected:
-                    ch = res.get("chunks") or {}
-                    cols["chunks"].append(
-                        [
-                            _chunk_row(c, rnd, tx)
-                            for pg in sorted(ch)
-                            for c in ch[pg]
-                        ]
-                    )
-                if "margins" in selected:
-                    mp = res.get("margins") or {}
-                    cols["margins"].append(
-                        [
-                            {
-                                "side": side,
-                                "x": rnd(m["x"]),
-                                "y": rnd(m["y"]),
-                                "width": rnd(m["width"]),
-                                "height": rnd(m["height"]),
-                                "page": m["page"],
-                            }
-                            for pg in sorted(mp)
-                            for side, m in mp[pg].items()
-                        ]
-                    )
+                for name, source, render in artifacts:
+                    cols[name].append(render(source(res)))
             arrays = [
                 pa.array(cols[field.name], type=field.type)
                 for field in computed_arrow

@@ -20,7 +20,6 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -28,9 +27,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core import extract_turn
 from ..core.maskview import render_turn_masks
 from ..settings import DEFAULT, Settings
+from .extract import run_turn
 
 MASK_SCHEMA = StructType(
     [
@@ -55,13 +54,14 @@ def extract_masks(
     settings: Settings = DEFAULT,
     types: tuple[str, ...] = ("regions", "zones", "columns"),
     with_svg: bool = True,
-    repartition: int | None = None,
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, ...) -> one row per
     (turn, page) with that page's SVG mask of ``types`` bounding boxes.
 
     ``with_svg=False`` drops the SVG body column (fingerprint only) for
-    pipelines that audit masks at scale without storing them.
+    pipelines that audit masks at scale without storing them.  A kernel
+    failure or a NULL ``turn_idx`` raises an error naming the row, as
+    ``extract``'s ``on_error="fail"`` does.
     """
     unknown = [t for t in types if t not in _VALID_TYPES]
     if unknown:
@@ -79,10 +79,6 @@ def extract_masks(
     page_h = settings.typesetter.page_height
 
     src = df.select("conv_id", "turn_idx", "text")
-    if repartition:
-        src = src.repartition(
-            repartition, F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
-        )
 
     def run(batches):
         for batch in batches:
@@ -91,7 +87,7 @@ def extract_masks(
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"]
             ):
-                res = extract_turn(text or "", settings, want=kernel_want)
+                res = run_turn(conv_id, turn_idx, text, settings, kernel_want)
                 masks = render_turn_masks(
                     res, page_width=page_w, page_height=page_h, types=types
                 )

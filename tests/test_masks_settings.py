@@ -63,6 +63,26 @@ def test_extract_masks_fingerprint_only_and_types(spark):
         extract_masks(make_transcripts(spark), types=("bogus",))
 
 
+def test_extract_masks_failure_names_the_row(spark):
+    """A kernel failure or a NULL turn_idx in the mask plan raises an
+    error naming the row, as extract's on_error='fail' does, not a bare
+    ZeroDivisionError / TypeError from inside the worker."""
+    from pdfextract_spark.plans.masks import extract_masks
+    from pdfextract_spark.settings import Settings, Typesetter
+
+    broken = Settings(typesetter=Typesetter(title_size=0.0))
+    with pytest.raises(
+        Exception, match="conv_id='c0' turn_idx=0: ZeroDivisionError"
+    ):
+        extract_masks(make_transcripts(spark), broken).collect()
+    df = spark.createDataFrame(
+        [("c9", None, "user", "poison")],
+        "conv_id string, turn_idx int, role string, text string",
+    )
+    with pytest.raises(Exception, match=r"NULL turn_idx for conv_id='c9'"):
+        extract_masks(df).collect()
+
+
 def test_font_metrics_match_afm_table(spark):
     """S3: the per-font min/max glyph advance from the Spark rollup
     equals milli-em units x size / 1000 (2 dp) from the engine's

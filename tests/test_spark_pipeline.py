@@ -29,41 +29,67 @@ def make_transcripts(spark):
     )
 
 
+def _as_column(value, dtype):
+    """Pick ``dtype``'s fields out of a rendered kernel value, the
+    shape a collected result column has after ``asDict(recursive=True)``."""
+    from pyspark.sql.types import ArrayType, StructType
+
+    if isinstance(dtype, ArrayType):
+        return [_as_column(v, dtype.elementType) for v in value or ()]
+    if isinstance(dtype, StructType):
+        if value is None:
+            return None
+        return {f.name: _as_column(value.get(f.name), f.dataType) for f in dtype}
+    return value
+
+
 def test_extract_matches_kernel_goldens(spark):
     """The Spark plan must equal the single-node kernel + canonical
-    rendering, per turn (the per-turn text equality gate)."""
+    rendering (``render_turn``), per turn, field for field over all
+    nine artifacts, at the default and a non-default precision."""
     from pdfextract_spark.core import extract_turn, render_turn
-    from pdfextract_spark.plans import extract
+    from pdfextract_spark.core.spatial import get_text_content
+    from pdfextract_spark.plans import RESULT_SCHEMA, extract
+    from pdfextract_spark.plans.extract import ARTIFACT_FIELDS
+    from pdfextract_spark.settings import Settings
 
-    out = {
-        r["turn_idx"]: r
-        for r in extract(make_transcripts(spark)).collect()
-    }
-    for i, text in enumerate(TEXTS):
-        golden = render_turn(extract_turn(text))
-        row = out[i]
-        # title text equality
-        gt = golden.get("title")
-        if gt is None:
-            assert row["title"] is None
-        else:
-            assert row["title"]["content"] == gt["content"]
-            assert row["title"]["line_height"] == gt["line_height"]
-        # reference strings in order
-        grefs = [(r["content"], r.get("order")) for r in golden["references"]]
-        srefs = [(r["content"], r["order"]) for r in (row["references"] or [])]
-        assert srefs == grefs
-        # region/line text equality under stable ordering
-        glines = [
-            l["content"] for reg in golden["regions"] for l in reg["lines"]
-        ]
-        slines = [
-            l["content"] for reg in (row["regions"] or []) for l in reg["lines"]
-        ]
-        assert slines == glines
-        # numeric rounding applied (2 dp)
-        for reg in row["regions"] or []:
-            assert reg["x"] == round(reg["x"], 2)
+    kernel_want = tuple(
+        {"title": "titles"}.get(a, a) for a in ARTIFACT_FIELDS
+    )
+    for precision in (2, 1):
+        settings = Settings(precision=precision)
+        out = {
+            r["turn_idx"]: r.asDict(recursive=True)
+            for r in extract(
+                make_transcripts(spark), settings, want=ARTIFACT_FIELDS
+            ).collect()
+        }
+        for i, text in enumerate(TEXTS):
+            golden = render_turn(
+                extract_turn(text, settings, want=kernel_want), settings
+            )
+            # where a column's layout differs from the kernel's dict
+            golden["zones"] = [dict(z, zone=z["group"]) for z in golden["zones"]]
+            golden["sections"] = [
+                dict(s, content=get_text_content(s)) for s in golden["sections"]
+            ]
+            golden["chunks"] = [
+                c for pg in sorted(golden["chunks"]) for c in golden["chunks"][pg]
+            ]
+            golden["margins"] = [
+                dict(m, side=side)
+                for pg in sorted(golden["margins"])
+                for side, m in golden["margins"][pg].items()
+            ]
+            golden.update(conv_id=f"c{i % 2}", turn_idx=i, role="user")
+            want = {
+                f.name: _as_column(golden[f.name], f.dataType)
+                for f in RESULT_SCHEMA
+            }
+            assert out[i] == want, f"turn {i} at precision {precision}"
+            # rounding actually applied at this precision
+            for reg in out[i]["regions"]:
+                assert reg["x"] == round(reg["x"], precision)
 
 
 def test_extract_ligature_transliteration(spark):
