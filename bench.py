@@ -1,9 +1,13 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value" (total sec), "unit": "sec", "queries":
-{name: sec}, "sf", plus extraction-throughput extras}.
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data, see ``main``) on local[$SPARK_GRAFT_CPUS] and prints ONE
+compact JSON line (see ``headline``): {"metric", "value" (total sec),
+"unit": "sec", "queries": {name: sec}, "sf", "cores", "turns",
+"extract_turns_per_sec", "windows", "fixed_overhead", "bands_file"}.
+The per-window Spark and DuckDB samples go to the side file named by
+"bands_file", so the line stays short enough to be read from the tail
+of the run's output.
 
 Modes:
   python bench.py                      # headline suite, one JSON line
@@ -30,6 +34,7 @@ def build_spark(cores: int):
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()
     )
@@ -42,28 +47,27 @@ def sf_of(sf_dir: str) -> float:
     return float(m.group(1).rstrip(".")) if m else 0.0
 
 
-# Pinned bench protocol: the suite below plus the two extraction rows
-# is the FIXED 18-query manifest recorded in every BENCH_r{N}.json —
-# hold it stable so rounds compare query-by-query.
-# Round 5 on: the suite runs in WINDOWS separate passes, each window
-# timing every Spark query and then IMMEDIATELY its DuckDB oracle, so
-# each query gets a (spark, duck) pair sampled seconds apart — the
-# shared host swings 2-5x between windows, so cross-engine ratios are
-# only honest when both sides see the same load.  The headline
-# "queries"/"duckdb_sec" fields stay min-across-windows; note min over
-# 3 windows draws stochastically lower than the min of 2 back-to-back
-# repeats that rounds 1-4 recorded as "min_of", so N is emitted as
-# "windows" (never as "min_of", a different estimator) and cross-round
-# comparisons should read the per-query "bands" (samples, medians,
-# same-window ratios), not the headline min.  Scaling RATIOS use
-# time-paired rounds instead — tools/scaling.py.
-WINDOWS = int(os.environ.get("SPARK_GRAFT_BENCH_WINDOWS", "3"))
-if WINDOWS < 1:
-    raise SystemExit(
-        f"SPARK_GRAFT_BENCH_WINDOWS={WINDOWS}: need >= 1 timing window"
-    )
+# Bench protocol: the extraction rows plus BENCH_QUERIES, run in
+# WINDOWS separate passes, each window timing every Spark query and
+# then IMMEDIATELY its DuckDB oracle, so each query gets a (spark, duck)
+# pair sampled seconds apart — the shared host swings 2-5x between
+# windows, so cross-engine ratios are only honest when both sides see
+# the same load.  The headline "queries" are min-across-windows; the
+# min over 3 windows draws stochastically lower than the min of 2
+# back-to-back repeats that rounds 1-4 recorded as "min_of", so
+# cross-round comparisons should read the per-query "bands" (samples,
+# medians, same-window ratios), not the headline min.  Scaling RATIOS
+# use time-paired rounds instead — tools/scaling.py.
+WINDOWS = 3
 
-# Headline operator queries benched besides the flagship extraction.
+# The operator queries, in the order every round recorded them: the
+# round-1 suite, then the round-3 additions (j6_asof_join ..
+# a13_svm_reference_score), round 4's near_dup_dedup and
+# dedup_substring_stats, and round 5's dedup_substring_stats_8x (the
+# same operator over the documents mirrored 8x with min_count 2 -> 16,
+# where the work amortizes the per-job floor).  Each round's additions
+# add their wall time to "value"; cross-round headline comparisons
+# must subtract them or compare per query.
 BENCH_QUERIES = [
     "a2_islands_sessionize",
     "a3_overlap_merge",
@@ -81,14 +85,6 @@ BENCH_QUERIES = [
     "token_count_bpe",
     "fingerprint_minshingle",
     "ann_cosine_topk",
-]
-
-# Round-3 manifest extension: the round-2 operators the pinned 18-query
-# suite predated.  Kept as a SEPARATE list so the original manifest
-# still compares round-over-round query-by-query; each of these also
-# gets a DuckDB denominator (its own oracle on the same parquet) in
-# the "duckdb_sec" record.
-BENCH_QUERIES_R3 = [
     "j6_asof_join",
     "dedup_paragraph_exact",
     "dedup_duplicate_clusters",
@@ -96,28 +92,55 @@ BENCH_QUERIES_R3 = [
     "sketch_count_min",
     "a12_kmeans_centers",
     "a13_svm_reference_score",
-]
-
-# Round-4 manifest extension: the composed mega-bucket-safe near-dup
-# pipeline (exact collapse -> LSH+Jaccard over canonicals -> connected
-# components -> re-attach), new driver query this round.
-BENCH_QUERIES_R4 = [
     "near_dup_dedup",
     "dedup_substring_stats",
-]
-
-# Round-5 manifest extension: dedup_substring_stats at an 8x-mirrored
-# corpus (min_count scaled 2 -> 16, identical duplicated-gram set).
-# The base entry's 5,000-doc input is fixed-overhead-dominated at
-# sf0.1 (BASELINE.md profiles ~0.7 s real work under ~2.4 s wall);
-# this entry measures the same operator where the work amortizes the
-# per-job floor — the regime a 100 TB run actually lives in.
-# NOTE: like the R3/R4 extensions, this adds its wall time (~6-12 s at
-# sf0.1) to the headline "value"; cross-round headline comparisons
-# must subtract the extension or compare per-query via "bands".
-BENCH_QUERIES_R5 = [
     "dedup_substring_stats_8x",
 ]
+
+# A query whose same-window DuckDB median is under this many seconds
+# is tagged "fixed_overhead": Spark's per-query floor (planning,
+# codegen, task scheduling: ~0.5-1 s on local[N]) dominates its Spark
+# time, so its Spark/DuckDB ratio measures that floor, not the plan.
+FIXED_OVERHEAD_DUCKDB_SEC = 0.5
+
+# Side file for the full per-window record, relative to this file's
+# directory.
+BANDS_FILE = "bench_bands.json"
+
+
+def fixed_overhead(duckdb_median: dict[str, float]) -> list[str]:
+    """The manifest's queries whose DuckDB median is under
+    FIXED_OVERHEAD_DUCKDB_SEC, in manifest order."""
+    return [
+        n
+        for n in BENCH_QUERIES
+        if n in duckdb_median and duckdb_median[n] < FIXED_OVERHEAD_DUCKDB_SEC
+    ]
+
+
+def headline(
+    queries: dict[str, float],
+    sf: float,
+    cores: int,
+    turns: int,
+    turns_per_sec: float,
+    overhead: list[str],
+    bands_file: str | None,
+) -> dict:
+    """The one stdout record."""
+    return {
+        "metric": "headline suite wall time (extraction + operators)",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": sf,
+        "cores": cores,
+        "turns": turns,
+        "extract_turns_per_sec": round(turns_per_sec, 1),
+        "windows": WINDOWS,
+        "fixed_overhead": overhead,
+        "bands_file": bands_file,
+    }
 
 
 def run_extraction(spark, sf_dir: str, turns_per_doc: int):
@@ -174,6 +197,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries: dict[str, float] = {}
+    overhead: list[str] = []
+    bands_file = None
 
     n_turns, ext_sec, tps, refs_sec = run_extraction(spark, sf_dir, turns_per_doc)
     queries["extract_pipeline"] = round(ext_sec, 3)
@@ -219,20 +244,14 @@ def main() -> None:
                 f"'{sf_dir}/{tname}.parquet'"
             )
 
-        names = (
-            BENCH_QUERIES
-            + BENCH_QUERIES_R3
-            + BENCH_QUERIES_R4
-            + BENCH_QUERIES_R5
-        )
-        spark_w: dict[str, list[float]] = {n: [] for n in names}
-        duck_w: dict[str, list[float]] = {n: [] for n in names}
+        spark_w: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
+        duck_w: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
         for _w in range(WINDOWS):
             # each query's DuckDB oracle runs IMMEDIATELY after its
             # Spark run — the two sides of a ratio are seconds apart,
             # not separated by a whole suite pass on a host whose load
             # swings 2-5x within a minute
-            for name in names:
+            for name in BENCH_QUERIES:
                 with fence_scope():
                     t0 = time.time()
                     QUERIES[name](spark, sf_dir).write.format("noop").mode(
@@ -244,7 +263,7 @@ def main() -> None:
                 duck_w[name].append(time.time() - t0)
 
         bands = {}
-        for name in names:
+        for name in BENCH_QUERIES:
             sw, dw = spark_w[name], duck_w[name]
             ratios = [s / d for s, d in zip(sw, dw)]
             queries[name] = round(min(sw), 3)
@@ -257,41 +276,25 @@ def main() -> None:
                 "ratio_min": round(min(ratios), 2),
                 "ratio_median": round(statistics.median(ratios), 2),
             }
-
-    total = round(sum(queries.values()), 3)
-    extras: dict = {}
-    if not extract_only:
-        extras["bands"] = bands
-        # min-across-windows denominators keep the field shape earlier
-        # rounds recorded; the same-window pairing lives in "bands"
-        extras["duckdb_sec"] = {
-            name: round(min(duck_w[name]), 3) for name in names
-        }
-        # j1_spark_over_duckdb keeps its rounds-1-4 min/min semantics
-        # (queries[j1] / j1_duckdb_sec reproduces it) so cross-round
-        # reads of the field compare like with like; the same-window
-        # median lives in the new j1_ratio_median (and in bands)
-        extras["j1_duckdb_sec"] = extras["duckdb_sec"]["j1_interval_join"]
-        extras["j1_spark_over_duckdb"] = round(
-            queries["j1_interval_join"] / extras["j1_duckdb_sec"], 2
+        overhead = fixed_overhead(
+            {n: b["duckdb_median"] for n, b in bands.items()}
         )
-        extras["j1_ratio_median"] = bands["j1_interval_join"][
-            "ratio_median"
-        ]
-    out = {
-        "metric": "headline suite wall time (extraction + operators)",
-        "value": total,
-        "unit": "sec",
-        "queries": queries,
-        "sf": sf_of(sf_dir),
-        "cores": cores,
-        "turns": n_turns,
-        "extract_turns_per_sec": round(tps, 1),
-        "windows": WINDOWS,
-        **extras,
-    }
+        bands_file = BANDS_FILE
+        side = {
+            "windows": WINDOWS,
+            "fixed_overhead_duckdb_sec": FIXED_OVERHEAD_DUCKDB_SEC,
+            "bands": bands,
+            # min-across-windows denominators, the field shape earlier
+            # rounds recorded; the same-window pairing is in "bands"
+            "duckdb_sec": {n: round(min(w), 3) for n, w in duck_w.items()},
+        }
+        here = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(here, BANDS_FILE), "w") as f:
+            json.dump(side, f, indent=1)
+    out = headline(
+        queries, sf_of(sf_dir), cores, n_turns, tps, overhead, bands_file
+    )
     print(json.dumps(out))
-
 
 if __name__ == "__main__":
     main()

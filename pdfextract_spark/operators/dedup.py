@@ -17,12 +17,6 @@ from .fence import fence as _fence
 from .fence import release_fence as _release_fence
 
 
-def _md5_int(col: Column) -> Column:
-    """First 12 hex digits of md5 as a bigint — stable across Spark and
-    DuckDB (both expose md5 as lowercase hex), unlike xxhash64."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
-
-
 def normalize_text(col: Column) -> Column:
     """Canonical text for hashing: lowercase, collapse whitespace, trim."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
@@ -72,39 +66,6 @@ def word_shingles(col: Column, k: int = 3) -> Column:
 CHUNKS_PER_MD5 = 4  # md5's 32 hex chars -> 4 independent 8-hex values
 
 
-def _mh_expr(s: int, shingle_col: Column) -> Column:
-    """MinHash function s over one shingle: 8 hex chars (32 bits) of
-    md5(shingle || '#' || salt), where 4 functions share one md5 call
-    via non-overlapping substrings (md5 output bits are independent).
-
-    Fixed-width lowercase hex compares lexicographically ==
-    numerically, so a string min IS the numeric MinHash — and any
-    md5-equipped engine (the DuckDB oracle) reproduces it verbatim."""
-    salt = s // CHUNKS_PER_MD5
-    off = (s % CHUNKS_PER_MD5) * 8 + 1
-    return F.substring(F.md5(F.concat(shingle_col, F.lit(f"#{salt}"))), off, 8)
-
-
-def minhash_signature(col: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """MinHash signature as array<string> (see _mh_expr).
-
-    NOTE the closure shape: ``F.transform`` passes the ELEMENT INDEX
-    to any two-parameter callable, so the idiomatic ``lambda x, s=s:``
-    default-arg trick silently binds the index over the seed — the
-    seed must be captured by a dedicated single-parameter closure."""
-    sh = word_shingles(col, k)
-
-    def mh(s: int):
-        return lambda x: _mh_expr(s, x)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, mh(s))).alias(f"mh{s}")
-            for s in range(num_hashes)
-        ]
-    )
-
-
 def minhash_bands(
     df: DataFrame,
     text_col: str = "text",
@@ -139,7 +100,16 @@ def _band_rows(
     band_size: int,
 ) -> DataFrame:
     """(id, band, band_hash) from ``shingles``, an array column over
-    ``df`` (see ``minhash_bands``)."""
+    ``df`` (see ``minhash_bands``).
+
+    MinHash function s over one shingle is 8 hex chars (32 bits) of
+    md5(shingle || '#' || salt) with salt = s // CHUNKS_PER_MD5: four
+    functions share one md5 call via non-overlapping substrings (md5
+    output bits are independent).  Fixed-width lowercase hex compares
+    lexicographically == numerically, so a string min IS the numeric
+    MinHash, and any md5-equipped engine (the DuckDB oracle)
+    reproduces it verbatim.  A band's hash is the md5 of its
+    ``band_size`` minima joined by ","."""
     if band_size <= 0 or num_hashes % band_size != 0:
         raise ValueError(
             f"num_hashes={num_hashes} must be a positive multiple of "
@@ -152,8 +122,9 @@ def _band_rows(
     sh = df.select(F.col(id_col), F.explode(shingles).alias("sh"))
     # project each salt's md5 ONCE before the aggregation: Catalyst
     # does not common-subexpression-eliminate the md5 across the
-    # num_hashes min() aggregates, so aggregating _mh_expr directly
-    # recomputes every md5 CHUNKS_PER_MD5 times (~25% slower measured)
+    # num_hashes min() aggregates, so aggregating a substring of an
+    # inline md5 recomputes every md5 CHUNKS_PER_MD5 times (~25% slower
+    # measured)
     n_salts = (num_hashes + CHUNKS_PER_MD5 - 1) // CHUNKS_PER_MD5
     pre = sh.select(
         id_col,
@@ -206,137 +177,6 @@ def _bucket_pairs(size_col: str) -> Column:
     return F.expr(f"{size_col} * ({size_col} - 1) DIV 2")
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fence: bool = True,
-    max_bucket_size: int | None = None,
-    stats: dict | None = None,
-    **kw,
-) -> DataFrame:
-    """Near-dup candidate pairs from MinHash LSH bands (distinct
-    (a, b) with a < b sharing at least one band bucket).
-
-    WARNING — pairwise-per-bucket bound: a bucket holding B docs emits
-    B^2/2 pairs, so mega-buckets (boilerplate corpora) explode here;
-    use ``lsh_star_edges``/``lsh_dedup_clusters`` for LSH-connectivity
-    dedup, or ``near_dup_dedup`` (which collapses exact duplicates
-    first) for the Jaccard-verified flavor.
-
-    ``max_bucket_size`` bounds that blow-up explicitly: buckets
-    holding more than this many docs are EXCLUDED from the pairwise
-    join, a ``UserWarning`` reports how many buckets were dropped
-    (with the largest size and the pair count avoided), and the same
-    numbers land in ``stats`` under ``lsh_oversized_buckets`` /
-    ``lsh_max_bucket_size_seen`` / ``lsh_pairs_avoided``.  Docs in a
-    dropped bucket can still pair through their OTHER bands, so
-    ``lsh_pairs_avoided`` is exact integer arithmetic but only an
-    UPPER BOUND on the pairs actually removed, and this
-    trades bounded recall loss on pathological buckets for a hard
-    O(max_bucket_size^2)-per-bucket work bound — the knob a 100-TB
-    run sets after ``lsh_star_edges``'s ``bucket_size`` diagnostic
-    shows a distinct-text mega-bucket.  Checking the cap costs one
-    bounded driver action over the (band, bucket) aggregate (it must
-    be eager to warn loudly); ``None`` (default) keeps the exact
-    uncapped semantics with zero extra work.
-
-    The band table is materialized once behind a checkpoint fence
-    (``fence=True``, default): the self-join otherwise re-evaluates the
-    whole shingle->md5->min pipeline on both sides (CollapseProject
-    inlining — 1.4 s vs 0.24 s measured at sf0.1).  Batch-only as a
-    result; release the fence storage with ``fence.fence_scope()`` /
-    ``release_fence`` after consuming the result, or pass
-    ``fence=False`` to keep pure lineage (streaming / fault-tolerant
-    callers) at the re-evaluation cost."""
-    return _candidate_pairs(
-        minhash_bands(df, text_col, id_col, **kw),
-        id_col,
-        fence,
-        max_bucket_size,
-        stats,
-    )
-
-
-def _candidate_pairs(
-    bands: DataFrame,
-    id_col: str,
-    fence: bool,
-    max_bucket_size: int | None,
-    stats: dict | None,
-) -> DataFrame:
-    """The fence, bucket cap and band self-join of
-    ``lsh_candidate_pairs``, over a ``_band_rows`` table."""
-    if fence:
-        bands = _fence(bands)
-    if max_bucket_size is not None:
-        if not fence:
-            # the cap's "one bounded driver action" claim requires a
-            # materialized band table: without this, the eager size
-            # aggregate below executes the whole shingle->md5->min
-            # pipeline at plan-BUILD time, and the un-fenced anti-join
-            # + self-join then re-evaluate it on every side (3-4x the
-            # module's most expensive stage).  Capped callers get a
-            # fence even under fence=False — release it with
-            # fence_scope()/release_fence like any other; a streaming
-            # foreachBatch caller holds a batch DataFrame, so
-            # localCheckpoint is legal there too.
-            bands = _fence(bands)
-        sizes = bands.groupBy("band", "band_hash").agg(
-            F.count("*").alias("_bsz")
-        )
-        over = sizes.where(F.col("_bsz") > max_bucket_size)
-        row = over.agg(
-            F.count("*").alias("n"),
-            F.max("_bsz").alias("mx"),
-            F.sum(_bucket_pairs("_bsz")).alias("avoided"),
-        ).collect()[0]
-        if stats is not None:
-            stats["lsh_oversized_buckets"] = int(row["n"])
-            stats["lsh_max_bucket_size_seen"] = (
-                int(row["mx"]) if row["mx"] is not None else 0
-            )
-            stats["lsh_pairs_avoided"] = (
-                int(row["avoided"]) if row["avoided"] is not None else 0
-            )
-        if row["n"]:
-            import warnings
-
-            warnings.warn(
-                f"lsh_candidate_pairs: {row['n']} band bucket(s) exceed "
-                f"max_bucket_size={max_bucket_size} (largest holds "
-                f"{row['mx']} docs) and were excluded from pairwise "
-                f"candidate generation, avoiding {row['avoided']} "
-                f"verify pairs; affected docs can still pair via other "
-                f"bands.  Inspect lsh_star_edges(...)'s bucket_size to "
-                f"understand the distribution.",
-                UserWarning,
-                stacklevel=3,
-            )
-            # the collected count says whether the oversized-key set
-            # fits a broadcast (it almost always does — each key holds
-            # > max_bucket_size docs, so there can't be many); fall
-            # back to a shuffle anti-join past ~10^6 keys
-            keys = over.select("band", "band_hash")
-            if int(row["n"]) <= 1_000_000:
-                keys = F.broadcast(keys)
-            bands = bands.join(keys, ["band", "band_hash"], "left_anti")
-    l = bands.alias("l")
-    r = bands.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b")
-        )
-        .distinct()
-    )
-
-
 def lsh_star_edges(
     df: DataFrame,
     text_col: str = "text",
@@ -348,7 +188,7 @@ def lsh_star_edges(
     STAR edges (bucket_min_doc -> doc) instead of all pairs.
 
     A bucket holding B copies of a boilerplate document emits B-1
-    edges here versus B^2/2 pairs from ``lsh_candidate_pairs`` — at
+    edges here versus B^2/2 pairs from ``lsh_jaccard_pairs`` — at
     web scale B can be 10^6+, so the pairwise form is a 10^12-row
     task while this stays linear.  Stars preserve exactly the
     connectivity LSH asserts, so feeding them to
@@ -362,7 +202,7 @@ def lsh_star_edges(
     would silently explode on.  The band table is materialized once
     behind a checkpoint fence — the hub aggregation and the join
     back both reference it (same CollapseProject re-evaluation trap as
-    lsh_candidate_pairs; same lifetime story — see operators/fence.py,
+    lsh_jaccard_pairs; same lifetime story — see operators/fence.py,
     ``fence=False`` opts out)."""
     bands = minhash_bands(df, text_col, id_col, **kw)
     if fence:
@@ -395,53 +235,6 @@ def lsh_dedup_clusters(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    fence: bool = True,
-) -> DataFrame:
-    """Exact k-shingle Jaccard for candidate pairs (verify stage after
-    LSH).  Joins are broadcast-eligible when the candidate set is
-    small; array_intersect/array_union stay JVM-side.  The shingle
-    table (``_shingle_table``) is materialized once (checkpoint fence)
-    — it is joined as both sides, and CollapseProject would otherwise
-    re-shingle the corpus twice (lifetime/opt-out story:
-    operators/fence.py).  When the candidates come from LSH over the
-    same corpus, ``lsh_jaccard_pairs`` shares that one shingle table
-    with the banding instead of shingling the corpus a second time."""
-    sh = _shingle_table(df, text_col, id_col, k)
-    if fence:
-        sh = _fence(sh)
-    return _jaccard_verify(sh, pairs, id_col)
-
-
-def _shingle_table(
-    df: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
-    """(id, sh): each doc's DISTINCT k-word shingles — the set the
-    Jaccard verify compares, and a valid MinHash input."""
-    return df.select(
-        F.col(id_col), F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh")
-    )
-
-
-def _jaccard_verify(sh: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """(a, b, jaccard) for ``pairs`` from a ``_shingle_table``."""
-    a = sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a")
-    b = sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b")
-    joined = pairs.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return joined.select(
-        "a",
-        "b",
-        F.when(union == 0, F.lit(0.0)).otherwise(inter / union).alias("jaccard"),
-    )
-
-
 def lsh_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -453,22 +246,134 @@ def lsh_jaccard_pairs(
     band_size: int = 4,
     k: int = 3,
 ) -> DataFrame:
-    """``jaccard_pairs(df, lsh_candidate_pairs(df, ...))`` with the
-    corpus shingled ONCE: a single fenced ``_shingle_table`` feeds both
-    the MinHash banding and the Jaccard verify, where the composition
-    shingles every text twice behind two fences.  Same (a, b, jaccard)
-    rows, bit for bit — MinHash over the distinct shingles equals
-    MinHash over all of them — and the same ``fence``,
-    ``max_bucket_size`` and ``stats`` semantics as
-    ``lsh_candidate_pairs`` (the cap runs on the band table).  The
-    shingle table's partitions are the input's, so its stages run one
-    task per input partition."""
-    sh = _shingle_table(df, text_col, id_col, k)
+    """Near-dup candidate pairs from MinHash LSH bands, each with its
+    exact k-shingle Jaccard: (a, b, jaccard) for every distinct a < b
+    sharing at least one band bucket.  No threshold is applied; the
+    caller filters on ``jaccard``.
+
+    The corpus is shingled ONCE: one table of each doc's DISTINCT
+    k-word shingles feeds both the MinHash banding (``_band_rows``)
+    and the Jaccard verify.  Distinct only shrinks the work: a min
+    ignores repeats, and array_intersect/array_union return distinct
+    elements.  The verify's joins are broadcast-eligible when the
+    candidate set is small, and its array_intersect/array_union stay
+    JVM-side.  The shingle table's partitions are the input's, so
+    its stages run one task per input partition.
+
+    WARNING — pairwise-per-bucket bound: a bucket holding B docs emits
+    B^2/2 pairs, so mega-buckets (boilerplate corpora) explode here;
+    use ``lsh_star_edges``/``lsh_dedup_clusters`` for LSH-connectivity
+    dedup, or ``near_dup_dedup`` (which collapses exact duplicates
+    first) for the Jaccard-verified flavor.
+
+    ``max_bucket_size`` bounds that blow-up explicitly: buckets
+    holding more than this many docs are EXCLUDED from the pairwise
+    join, a ``UserWarning`` reports how many buckets were dropped
+    (with the largest size and the pair count avoided), and the same
+    numbers land in ``stats`` under ``lsh_oversized_buckets`` /
+    ``lsh_max_bucket_size_seen`` / ``lsh_pairs_avoided``.  Docs in a
+    dropped bucket can still pair through their OTHER bands, so
+    ``lsh_pairs_avoided`` is exact integer arithmetic but only an
+    UPPER BOUND on the pairs actually removed, and this
+    trades bounded recall loss on pathological buckets for a hard
+    O(max_bucket_size^2)-per-bucket work bound — the knob a 100-TB
+    run sets after ``lsh_star_edges``'s ``bucket_size`` diagnostic
+    shows a distinct-text mega-bucket.  Checking the cap costs one
+    bounded driver action over the (band, bucket) aggregate (it must
+    be eager to warn loudly); ``None`` (default) keeps the exact
+    uncapped semantics with zero extra work.
+
+    The shingle table and the band table are each materialized once
+    behind a checkpoint fence (``fence=True``, default): both are
+    joined as both sides, and CollapseProject inlining would otherwise
+    re-evaluate the whole shingle->md5->min pipeline on each side
+    (1.4 s vs 0.24 s measured at sf0.1 for the band self-join).
+    Batch-only as a result; release the fence storage with
+    ``fence.fence_scope()`` / ``release_fence`` after consuming the
+    result, or pass ``fence=False`` to keep pure lineage (streaming /
+    fault-tolerant callers) at the re-evaluation cost."""
+    sh = df.select(
+        F.col(id_col),
+        F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"),
+    )
     if fence:
         sh = _fence(sh)
     bands = _band_rows(sh, id_col, F.col("sh"), num_hashes, band_size)
-    pairs = _candidate_pairs(bands, id_col, fence, max_bucket_size, stats)
-    return _jaccard_verify(sh, pairs, id_col)
+    # the cap's "one bounded driver action" claim requires a
+    # materialized band table: without it, the eager size aggregate
+    # below executes the whole shingle->md5->min pipeline at plan-BUILD
+    # time, and the un-fenced anti-join + self-join then re-evaluate it
+    # on every side (3-4x the module's most expensive stage).  Capped
+    # callers get a fence even under fence=False — release it with
+    # fence_scope()/release_fence like any other; a streaming
+    # foreachBatch caller holds a batch DataFrame, so localCheckpoint
+    # is legal there too.
+    if fence or max_bucket_size is not None:
+        bands = _fence(bands)
+    if max_bucket_size is not None:
+        sizes = bands.groupBy("band", "band_hash").agg(
+            F.count("*").alias("_bsz")
+        )
+        over = sizes.where(F.col("_bsz") > max_bucket_size)
+        row = over.agg(
+            F.count("*").alias("n"),
+            F.max("_bsz").alias("mx"),
+            F.sum(_bucket_pairs("_bsz")).alias("avoided"),
+        ).collect()[0]
+        if stats is not None:
+            stats["lsh_oversized_buckets"] = int(row["n"])
+            stats["lsh_max_bucket_size_seen"] = (
+                int(row["mx"]) if row["mx"] is not None else 0
+            )
+            stats["lsh_pairs_avoided"] = (
+                int(row["avoided"]) if row["avoided"] is not None else 0
+            )
+        if row["n"]:
+            import warnings
+
+            warnings.warn(
+                f"lsh_jaccard_pairs: {row['n']} band bucket(s) exceed "
+                f"max_bucket_size={max_bucket_size} (largest holds "
+                f"{row['mx']} docs) and were excluded from pairwise "
+                f"candidate generation, avoiding {row['avoided']} "
+                f"verify pairs; affected docs can still pair via other "
+                f"bands.  Inspect lsh_star_edges(...)'s bucket_size to "
+                f"understand the distribution.",
+                UserWarning,
+                stacklevel=2,
+            )
+            # the collected count says whether the oversized-key set
+            # fits a broadcast (it almost always does — each key holds
+            # > max_bucket_size docs, so there can't be many); fall
+            # back to a shuffle anti-join past ~10^6 keys
+            keys = over.select("band", "band_hash")
+            if int(row["n"]) <= 1_000_000:
+                keys = F.broadcast(keys)
+            bands = bands.join(keys, ["band", "band_hash"], "left_anti")
+    l = bands.alias("l")
+    r = bands.alias("r")
+    pairs = (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b")
+        )
+        .distinct()
+    )
+    a = sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a")
+    b = sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b")
+    joined = pairs.join(a, "a").join(b, "b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    return joined.select(
+        "a",
+        "b",
+        F.when(union == 0, F.lit(0.0)).otherwise(inter / union).alias("jaccard"),
+    )
 
 
 # Token bit j reads nibble (j % 32) of ONE md5 per token: bits 0-31
@@ -483,93 +388,6 @@ _NIBBLE_SETS = (
 )
 
 
-def _token_hexes(col: Column, bits: int) -> Column:
-    """Per-token md5 hex (32 nibbles serve up to 64 bits, 2 per nibble)."""
-    if bits > 64:
-        raise ValueError(f"simhash supports at most 64 bits, got {bits}")
-    return F.md5(col)
-
-
-def simhash(col: Column, bits: int = 16) -> Column:
-    """SimHash over whitespace tokens: bit j of the fingerprint is the
-    sign of sum over tokens of (+1 / -1).
-
-    Token bit j is defined as the high bit of md5 hex nibble j
-    (nibble >= '8'), which any md5-equipped engine reproduces — the
-    DuckDB oracle states the identical expression.  Single-bigint form
-    (bits <= 32); for the production 64-bit fingerprint use
-    ``simhash_table_wide``, which chunks the bits across columns to
-    bound both codegen'd expression size and the 2^j weight literals.
-
-    NULL/empty text maps to fingerprint 0 (an empty token stream has
-    no positive bit sums) — 0 therefore means "no signal", colliding
-    with any legitimately all-negative fingerprint; filter NULL texts
-    out first when 0 must stay unambiguous (``simhash_table_wide``
-    excludes them outright)."""
-    if bits > 32:
-        raise ValueError(
-            f"simhash single-bigint form supports <= 32 bits (got {bits}); "
-            f"use simhash_table_wide for wider fingerprints"
-        )
-    tokens = F.split(normalize_text(col), " ")
-    hexes = F.transform(tokens, lambda t: _token_hexes(t, bits))
-    return _simhash_bits(hexes, bits)
-
-
-def _simhash_bits(hexes: Column, bits: int, offset: int = 0) -> Column:
-    """Fingerprint of bits [offset, offset + bits) from a per-token
-    hex array column, weighted 2^(j - offset)."""
-    out = F.lit(0).cast("bigint")
-    for j in range(offset, offset + bits):
-        nibble_pos = (j % 32) + 1
-        nibble_set = _NIBBLE_SETS[j // 32]
-        # NB: the merge callable must stay exactly binary (acc, h) for
-        # pyspark's lambda-variable mapping; the loop locals are safe to
-        # close over because F.aggregate consumes the lambda within
-        # this iteration.
-        bit_sum = F.aggregate(
-            hexes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                F.substring(h, nibble_pos, 1).isin(*nibble_set),
-                1,
-            ).otherwise(-1),
-        )
-        out = out + F.when(
-            bit_sum > 0, F.lit(2 ** (j - offset)).cast("bigint")
-        ).otherwise(0)
-    return out
-
-
-def simhash_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-) -> DataFrame:
-    """(id, fingerprint) with the md5-hex array PROJECTED ONCE before
-    the per-bit aggregates.  The single-expression ``simhash`` column
-    embeds the token-hash subtree in every bit aggregate and Catalyst
-    does not eliminate it across them (~3.5x slower measured at
-    sf0.1); naming the array in its own projection hashes each token
-    exactly once.  Same values, same oracle.  Single-bigint form
-    (bits <= 32) — ``simhash_table_wide`` is the production-width path."""
-    if bits > 32:
-        raise ValueError(
-            f"simhash_table single-bigint form supports <= 32 bits "
-            f"(got {bits}); use simhash_table_wide"
-        )
-    tokens = F.split(normalize_text(F.col(text_col)), " ")
-    hx = df.select(
-        F.col(id_col),
-        F.transform(tokens, lambda t: _token_hexes(t, bits)).alias("_hexes"),
-    )
-    return hx.select(
-        id_col, _simhash_bits(F.col("_hexes"), bits).alias("fingerprint")
-    )
-
-
 def simhash_table_wide(
     df: DataFrame,
     text_col: str = "text",
@@ -579,6 +397,9 @@ def simhash_table_wide(
 ) -> DataFrame:
     """Production-width SimHash: (id, fp0..fpN) where fpC holds bits
     [C*chunk_bits, (C+1)*chunk_bits) of a ``bits``-wide fingerprint.
+    Fingerprint bit j is set when more of the normalized text's
+    whitespace tokens have token bit j set than not (see
+    ``_NIBBLE_SETS``).
 
     16-bit fingerprints collide by birthday at ~300 docs; 64 bits is
     the production width (Manku et al., WWW'07).  Emitting the bits as
@@ -596,13 +417,16 @@ def simhash_table_wide(
     that the Hamming equi-join then dropped — hid those rows without
     any signal.  Route NULL texts through the exact-dedup operators
     (which group them deliberately) instead."""
+    if bits > 64:
+        raise ValueError(f"simhash_table_wide supports at most 64 bits, got {bits}")
     if bits % chunk_bits:
         raise ValueError(f"bits={bits} not divisible by chunk_bits={chunk_bits}")
     df = df.where(F.col(text_col).isNotNull())
     tokens = F.split(normalize_text(F.col(text_col)), " ")
+    # one md5 per token: its 32 nibbles serve up to 64 bits, 2 per nibble
     hx = df.select(
         F.col(id_col),
-        F.transform(tokens, lambda t: _token_hexes(t, bits)).alias("_hexes"),
+        F.transform(tokens, lambda t: F.md5(t)).alias("_hexes"),
     )
     # ONE pass over the token array builds all ``bits`` signed counts at
     # once (zip_with accumulator), instead of ``bits`` separate

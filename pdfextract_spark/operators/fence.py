@@ -121,9 +121,9 @@ def fence_scope(blocking: bool = False) -> Iterator[list[DataFrame]]:
     """Release every fence created in the dynamic extent of the block.
 
         with fence_scope():
-            pairs = lsh_candidate_pairs(docs)   # fences its band table
+            pairs = lsh_jaccard_pairs(docs)   # fences its shingle and band tables
             result = pairs.collect()
-        # band-table checkpoint storage is freed here
+        # the tables' checkpoint storage is freed here
 
     Scopes nest (inner fences release at the inner exit).  The yielded
     list holds the fenced frames, newest last, for callers that want to

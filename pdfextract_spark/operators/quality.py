@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines: language-ID,
-quality scoring, token counting, document fingerprinting (per the
+quality scoring, token counting, PII scrubbing (per the
 build brief; complements SURVEY.md §2.7).
 
 All pure Catalyst expressions: lowercase/split/regexp/aggregate — no
@@ -11,8 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..core.names import STOPWORDS
-from .dedup import _md5_int, normalize_text
+from .dedup import normalize_text
 
 # A compact high-frequency English function-word set for language ID
 # (subset of the reference's stopword list, data/stopwords.txt).
@@ -85,22 +84,6 @@ def quality_score(col: Column) -> Column:
     return (
         len_ok * 0.3 + sw_ok * 0.3 + punct_ok * 0.2 + mwl_ok * 0.2
     ).alias("quality")
-
-
-def char_shingle_fingerprint(col: Column, k: int = 8) -> Column:
-    """Document fingerprint: min md5-int over k-char shingles of the
-    normalized text (winnowing-style rolling-hash min).  Stable and
-    SQL-reproducible."""
-    t = normalize_text(col)
-    n = F.length(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    shingles = F.transform(idx, lambda i: F.substring(t, i, k))
-    return F.array_min(F.transform(shingles, _md5_int))
-
-
-def reference_stopwords() -> list[str]:
-    """The verbatim stopword list from the reference's data file."""
-    return list(STOPWORDS)
 
 
 LANG_FUNCTION_WORDS = {

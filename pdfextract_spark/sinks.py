@@ -386,28 +386,3 @@ def write_table(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(target)
     return "parquet"
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Persist as a Hive-bucketed table: rows are hash-distributed into
-    ``n_buckets`` files per partition BY THE WRITER, so later joins or
-    aggregations on ``bucket_cols`` between tables bucketed the same
-    way need NO exchange — the co-located-join layout for tables that
-    are joined repeatedly (e.g. transcripts x resolved references on
-    conv_id).  Bucketing metadata lives in the session catalog, hence
-    ``saveAsTable`` (plain ``.parquet(path)`` cannot carry it); on a
-    cluster the same call writes through the shared metastore/Iceberg
-    catalog.  ``sort_cols`` additionally sorts within each bucket so a
-    sort-merge join skips its sort as well."""
-    w = df.write.format(fmt).mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)

@@ -5,8 +5,8 @@ import pytest
 def spark(tmp_path_factory):
     from pyspark.sql import SparkSession
 
-    # warehouse under pytest's session tmp dir: catalog-backed tests
-    # (bucketed tables) must never write inside the repo, warehouse.dir
+    # warehouse under pytest's session tmp dir: a catalog-backed write
+    # (saveAsTable) must never land inside the repo, warehouse.dir
     # is a static conf that cannot change after session start, and
     # pytest prunes old tmp_path_factory dirs so runs don't accumulate
     wh = str(tmp_path_factory.mktemp("spark_warehouse"))

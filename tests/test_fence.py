@@ -75,11 +75,11 @@ def test_fence_scope_releases_operator_storage(spark):
             for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     with fence_scope(blocking=True):
-        pairs = dedup.lsh_candidate_pairs(
+        pairs = dedup.lsh_jaccard_pairs(
             df, num_hashes=8, band_size=4, k=3
         )
         pairs.count()
-        assert _ids(spark) - base, "band table should be fenced in-scope"
+        assert _ids(spark) - base, "shingle and band tables should be fenced in-scope"
     assert not (_ids(spark) - base), "scope exit must free all fences"
 
 
@@ -100,12 +100,7 @@ def test_fence_false_opts_out_of_checkpointing(spark):
     base = _ids(spark)
     rows = [(i, f"doc {i} alpha beta gamma delta") for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    dedup.lsh_candidate_pairs(df, num_hashes=8, band_size=4, fence=False).count()
-    dedup.jaccard_pairs(
-        df,
-        spark.createDataFrame([(1, 2)], "a bigint, b bigint"),
-        fence=False,
-    ).count()
+    dedup.lsh_jaccard_pairs(df, num_hashes=8, band_size=4, fence=False).count()
     assert not (_ids(spark) - base)
 
 
@@ -167,7 +162,7 @@ def test_near_dup_dedup_mega_bucket_is_linear(spark):
         .agg(F.min("doc_id").alias("doc_id"), F.first("text").alias("text"))
         .select("doc_id", "text")
     )
-    n_candidates = dedup.lsh_candidate_pairs(
+    n_candidates = dedup.lsh_jaccard_pairs(
         canon, num_hashes=16, band_size=4, k=3
     ).count()
     assert n_candidates <= 6  # 4 distinct texts -> at most C(4,2) pairs

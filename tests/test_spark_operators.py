@@ -115,23 +115,107 @@ def test_exact_dedup(spark):
     assert by_keep == {1: 2, 3: 1}
 
 
+def _py_lsh(texts, num_hashes=16, band_size=4, k=3):
+    """Independent pure-Python MinHash -> band -> candidate -> Jaccard
+    reference: each doc's DISTINCT k-word shingles of its normalized
+    text, MinHash s = 8-hex chunk (s % 4) of md5(shingle + "#{salt}")
+    with salt = s // 4, band hash = md5 of the band's minima joined by
+    ",".  Returns ({(doc, band): band_hash}, {(a, b): jaccard}) over
+    every a < b sharing a band bucket."""
+    import hashlib
+
+    def shingles(t):
+        w = " ".join(t.lower().split()).split(" ")
+        return {" ".join(w[i : i + k]) for i in range(len(w) - k + 1)}
+
+    sh = {d: shingles(t) for d, t in texts.items()}
+    bands = {}
+    for d, ss in sh.items():
+        if not ss:
+            continue  # nothing to hash: no band rows, like explode([])
+        hexes = [
+            [hashlib.md5(f"{x}#{salt}".encode()).hexdigest() for x in ss]
+            for salt in range((num_hashes + 3) // 4)
+        ]
+        mins = [
+            min(h[(s % 4) * 8 : (s % 4) * 8 + 8] for h in hexes[s // 4])
+            for s in range(num_hashes)
+        ]
+        for b in range(num_hashes // band_size):
+            sig = ",".join(mins[b * band_size : (b + 1) * band_size])
+            bands[(d, b)] = hashlib.md5(sig.encode()).hexdigest()
+    pairs = {}
+    for (a, band), h in bands.items():
+        for (b, band2), h2 in bands.items():
+            if a < b and band == band2 and h == h2:
+                pairs[(a, b)] = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+    return bands, pairs
+
+
+def _lsh_corpus():
+    """Seeded families of 24-word docs, each variant rewriting 1-8
+    words of its family's base (Jaccards spread over 0.1-0.9, so band
+    collisions are borderline), plus a doc with repeated shingles, a
+    near-dup of it and a doc too short to shingle."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = {}
+    for fam in range(6):
+        base = [rng.choice(vocab) for _ in range(24)]
+        for v in range(5):
+            ws = list(base)
+            for _ in range(v * 2):
+                ws[rng.randrange(24)] = rng.choice(vocab)
+            texts[fam * 10 + v] = " ".join(
+                w.upper() if rng.random() < 0.2 else w for w in ws
+            )
+    loop = "spam eggs and ham " * 4 + "with toast and jam"
+    texts[100] = loop
+    texts[101] = loop.replace("jam", "tea")
+    texts[102] = "too  short"
+    return texts
+
+
 def test_lsh_candidates_find_near_dups(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    near = base.replace("today", "tomorrow")
-    other = "completely unrelated content about database engines and query plans"
+    """lsh_jaccard_pairs' (a, b, jaccard) rows equal the pure-Python
+    reference's exactly, on a corpus where many pairs sit near the
+    band-collision threshold."""
+    texts = _lsh_corpus()
     df = spark.createDataFrame(
-        [(1, base), (2, near), (3, other)], "doc_id bigint, text string"
+        list(texts.items()), "doc_id bigint, text string"
     )
-    pairs = dedup.lsh_candidate_pairs(df, num_hashes=16, band_size=4, k=3).collect()
-    assert (1, 2) in {(r["a"], r["b"]) for r in pairs}
-    jac = dedup.jaccard_pairs(
-        df, dedup.lsh_candidate_pairs(df, num_hashes=16, band_size=4, k=3)
-    ).collect()
-    j12 = [r["jaccard"] for r in jac if (r["a"], r["b"]) == (1, 2)][0]
-    assert j12 > 0.5
-    # the shingle-once path returns the composition's rows exactly
-    once = dedup.lsh_jaccard_pairs(df, num_hashes=16, band_size=4, k=3)
-    assert sorted(once.collect()) == sorted(jac)
+    _, want = _py_lsh(texts)
+    got = {
+        (r["a"], r["b"]): r["jaccard"]
+        for r in dedup.lsh_jaccard_pairs(
+            df, num_hashes=16, band_size=4, k=3
+        ).collect()
+    }
+    assert got == want
+    # the reference is not vacuous: near-dups pair, far docs do not
+    assert (0, 1) in want and (100, 101) in want
+    assert not any(a // 10 != b // 10 for a, b in want if b < 100)
+    assert 10 <= len(want) < 6 * 10
+
+
+def test_minhash_bands_match_python_reference(spark):
+    """minhash_bands' (doc, band, band_hash) rows equal the pure-Python
+    MinHash reference's, for two band shapes."""
+    texts = _lsh_corpus()
+    df = spark.createDataFrame(
+        list(texts.items()), "doc_id bigint, text string"
+    )
+    for num_hashes, band_size in ((16, 4), (12, 3)):
+        want, _ = _py_lsh(texts, num_hashes, band_size)
+        got = {
+            (r["doc_id"], r["band"]): r["band_hash"]
+            for r in dedup.minhash_bands(
+                df, num_hashes=num_hashes, band_size=band_size, k=3
+            ).collect()
+        }
+        assert got == want, (num_hashes, band_size)
 
 
 def test_simhash_near_dup_low_hamming(spark):
@@ -141,12 +225,13 @@ def test_simhash_near_dup_low_hamming(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, other)], "doc_id bigint, text string"
     )
-    out = {r["doc_id"]: r["h"] for r in df.select(
-        "doc_id", dedup.simhash(F.col("text"), 16).alias("h")
-    ).collect()}
+    out = {
+        r["doc_id"]: (r["fp0"], r["fp1"], r["fp2"], r["fp3"])
+        for r in dedup.simhash_table_wide(df, bits=64, chunk_bits=16).collect()
+    }
 
     def ham(a, b):
-        return bin(a ^ b).count("1")
+        return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
     assert ham(out[1], out[2]) <= ham(out[1], out[3])
 
@@ -1003,60 +1088,6 @@ def test_count_min_sketch_properties(spark):
     assert d == b
 
 
-def test_minhash_signature_and_fingerprint_columns(spark):
-    """The column-level conveniences agree with their table-level /
-    query forms: minhash_signature's per-function minima equal
-    minhash_bands' aggregated mins, and char_shingle_fingerprint is
-    the md5-int min over k-char shingles."""
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id bigint, text string",
-    )
-    sig = df.select(
-        dedup.minhash_signature(F.col("text"), num_hashes=8, k=3).alias("s")
-    ).head()["s"]
-    sh = df.select(
-        "doc_id", F.explode(dedup.word_shingles(F.col("text"), 3)).alias("sh")
-    )
-    want = [
-        sh.agg(F.min(dedup._mh_expr(s, F.col("sh")))).head()[0]
-        for s in range(8)
-    ]
-    assert sig == want
-    fp = df.select(
-        Q.char_shingle_fingerprint(F.col("text"), k=8).alias("f")
-    ).head()["f"]
-    import hashlib
-
-    norm = "the quick brown fox jumps over the lazy dog"
-    mins = min(
-        int(hashlib.md5(norm[i : i + 8].encode()).hexdigest()[:12], 16)
-        for i in range(len(norm) - 7)
-    )
-    assert fp == mins
-
-
-def test_simhash_wide_matches_narrow_chunks(spark):
-    """simhash_table_wide's chunk columns reassemble to the same bits
-    the single-bigint form computes (shared bit definition)."""
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"), (2, "one two three")],
-        "doc_id bigint, text string",
-    )
-    wide = {
-        r["doc_id"]: (r["fp0"], r["fp1"], r["fp2"], r["fp3"])
-        for r in dedup.simhash_table_wide(df, bits=64, chunk_bits=16).collect()
-    }
-    lo32 = {
-        r["doc_id"]: r["fingerprint"]
-        for r in dedup.simhash_table(df, bits=32).collect()
-    }
-    for d, (f0, f1, _f2, _f3) in wide.items():
-        assert f0 + (f1 << 16) == lo32[d]
-        for f in wide[d]:
-            assert 0 <= f < 2**16
-
-
 def test_simhash_hamming_pairs_full_recall(spark):
     """Pigeonhole blocking finds EVERY pair within Hamming 3 of the
     64-bit fingerprint — including planted near-dups — and an exact
@@ -1125,7 +1156,7 @@ def test_lsh_star_edges_same_clusters_as_pairs(spark):
     pair_comp = {
         (r["node"], r["comp"])
         for r in dedup.connected_components(
-            dedup.lsh_candidate_pairs(df, **kw), "a", "b"
+            dedup.lsh_jaccard_pairs(df, **kw).select("a", "b"), "a", "b"
         ).collect()
     }
     star_comp = {
@@ -1154,8 +1185,9 @@ def test_kmeans_null_feature_assigns_cluster_zero(spark):
 
 
 def test_simhash_wide_hi_chunks_match_python_reference(spark):
-    """fp2/fp3 (bits 32-63, the second-nibble-bit plane) checked
-    value-exact against an independent pure-Python reference."""
+    """All four chunks, fp2/fp3 (bits 32-63, the second-nibble-bit
+    plane) included, checked value-exact against an independent
+    pure-Python reference."""
     import hashlib
 
     rows = [(1, "alpha beta gamma delta"), (2, "the quick brown fox " * 5)]
@@ -1339,7 +1371,7 @@ def test_lsh_max_bucket_size_caps_distinct_text_mega_bucket(spark):
     stats: dict = {}
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        capped = dedup.lsh_candidate_pairs(
+        capped = dedup.lsh_jaccard_pairs(
             df,
             num_hashes=16,
             band_size=4,
@@ -1347,8 +1379,14 @@ def test_lsh_max_bucket_size_caps_distinct_text_mega_bucket(spark):
             max_bucket_size=100,
             stats=stats,
         ).count()
-    msgs = [str(w.message) for w in caught if w.category is UserWarning]
-    assert any("max_bucket_size=100" in m for m in msgs), msgs
+    cap = [
+        w for w in caught
+        if w.category is UserWarning and "max_bucket_size=100" in str(w.message)
+    ]
+    assert len(cap) == 1, [str(w.message) for w in caught]
+    assert str(cap[0].message).startswith("lsh_jaccard_pairs:")
+    # the warning points at the caller's line, not at library internals
+    assert cap[0].filename == __file__
     assert stats["lsh_oversized_buckets"] >= 1
     assert stats["lsh_max_bucket_size_seen"] > 100
     # the mega buckets alone imply millions of avoided B^2/2 pairs...
@@ -2035,3 +2073,16 @@ def test_simhash_wide_excludes_null_text(spark):
     rows = simhash_table_wide(df).collect()
     assert [r["doc_id"] for r in rows] == [1]
     assert all(v is not None for v in rows[0].asDict().values())
+
+
+@pytest.mark.parametrize(
+    "bits, chunk_bits, match",
+    [(80, 16, "at most 64 bits"), (64, 24, "not divisible")],
+)
+def test_simhash_wide_rejects_bad_widths(spark, bits, chunk_bits, match):
+    """Token bits come from one md5's 32 nibbles, 2 per nibble, so a
+    fingerprint wider than 64 bits would repeat bits; a width that is
+    not a whole number of chunks would drop its tail bits."""
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=match):
+        dedup.simhash_table_wide(df, bits=bits, chunk_bits=chunk_bits)

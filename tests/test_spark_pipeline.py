@@ -505,44 +505,6 @@ def test_write_table_dispatch(spark, tmp_path):
         write_table(df, "iceberg:db.t", storage="parquet")
 
 
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
-    """Co-located join layout: two tables bucketed the same way on the
-    join key join WITHOUT any Exchange (shuffle) in the physical plan,
-    while the same join on plain parquet shuffles both sides — the
-    bucketing story for repeatedly-joined tables, proven on the plan."""
-    from pdfextract_spark.sinks import write_bucketed
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS bktest")
-    left = spark.range(2000).selectExpr(
-        "concat('conv-', id % 97) AS conv_id", "id AS turn_idx"
-    )
-    right = spark.range(500).selectExpr(
-        "concat('conv-', id % 97) AS conv_id", "id AS ref_id"
-    )
-    try:
-        write_bucketed(left, "bktest.turns", ["conv_id"], n_buckets=8)
-        write_bucketed(right, "bktest.refs", ["conv_id"], n_buckets=8)
-        # disable broadcast so the join would otherwise shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bktest.turns").join(
-            spark.table("bktest.refs"), "conv_id"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:800]
-        assert joined.count() > 0
-        # control: the identical join over non-bucketed data shuffles
-        ctrl = left.join(right, "conv_id")
-        ctrl_plan = ctrl._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in ctrl_plan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        spark.sql("DROP TABLE IF EXISTS bktest.turns")
-        spark.sql("DROP TABLE IF EXISTS bktest.refs")
-        spark.sql("DROP DATABASE IF EXISTS bktest")
-
-
 def test_extract_carry_columns(spark):
     """carry= passes input columns through the 1:1 Arrow stage
     verbatim (event-time ts for streaming watermarks, or any caller
